@@ -9,6 +9,14 @@ the same job is one in-process function call: read -> fillna ->
 date-range filter -> per-asset daily % returns (lag window) -> global
 averages -> CSV outputs + a collected summary.
 
+Shape of one request: the CSV is scanned once and every
+``<asset>_Retorno`` column comes from a single Window projection, so
+Catalyst analyzes the window once, not once per asset. The date-sorted
+``daily`` frame is persisted for the request and freed in a ``finally``
+block, also when a write fails. Three actions read it: the daily CSV
+write, the averages CSV write, and one ``first()`` of an aggregate that
+carries the row count next to the averages.
+
 Parity notes (golden-tested in tests/test_runner.py):
 
 - Output naming matches the reference: per-asset return columns are
@@ -29,7 +37,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_financial_reporting_spark.session import pin_semantics
@@ -37,12 +45,21 @@ from bigdata_financial_reporting_spark.sources.readers import read_csv
 from bigdata_financial_reporting_spark.sources.writers import write_single_csv
 
 
-def validate_date(s: str, name: str = "date") -> str:
-    """yyyy-MM-dd validation (mirrors reference script.py:7-15)."""
+def _parse_date(s: str, name: str) -> dt.date:
+    """Canonical yyyy-MM-dd only: ``2024-1-9`` parses under ``strptime``
+    but does not format back to itself, so it is refused."""
     try:
-        dt.datetime.strptime(s, "%Y-%m-%d")
+        d = dt.datetime.strptime(s, "%Y-%m-%d").date()
     except (ValueError, TypeError) as exc:
         raise ValueError(f"{name} must be yyyy-MM-dd, got {s!r}") from exc
+    if d.isoformat() != s:
+        raise ValueError(f"{name} must be yyyy-MM-dd, got {s!r}")
+    return d
+
+
+def validate_date(s: str, name: str = "date") -> str:
+    """yyyy-MM-dd validation (mirrors reference script.py:7-15)."""
+    _parse_date(s, name)
     return s
 
 
@@ -61,9 +78,8 @@ def run_report(
     contract; ``False`` writes standard multi-part CSV directories (the
     scale default — SURVEY.md §7.4).
     """
-    validate_date(initial_date, "initial_date")
-    validate_date(final_date, "final_date")
-    if final_date < initial_date:
+    lo = _parse_date(initial_date, "initial_date")
+    if _parse_date(final_date, "final_date") < lo:
         raise ValueError(f"final_date {final_date} precedes initial_date {initial_date}")
     pin_semantics(spark)
 
@@ -81,40 +97,49 @@ def run_report(
     )
 
     # R9-R11: global date order (small report inputs), one return column
-    # per asset. Backtick-quote names — `S&P500` is a legal asset name.
-    w = Window.orderBy(F.col(f"`{date_col}`"))
-    daily = filtered
-    for a in assets:
-        daily = daily.withColumn(
-            f"{a}_Retorno",
-            (F.col(f"`{a}`") / F.lag(F.col(f"`{a}`")).over(w) - 1) * 100,
-        )
-
-    # R12: global averages (NULL returns skipped by avg).
-    averages = daily.agg(
+    # per asset, all in one projection. Backtick-quote names — `S&P500`
+    # is a legal asset name.
+    date = F.col(f"`{date_col}`")
+    w = Window.orderBy(date)
+    daily = filtered.select(
+        "*",
         *[
-            F.avg(F.col(f"`{a}_Retorno`")).alias(f"Media_{a}_Retorno")
+            ((F.col(f"`{a}`") / F.lag(F.col(f"`{a}`")).over(w) - 1) * 100).alias(
+                f"{a}_Retorno"
+            )
             for a in assets
-        ]
-    )
+        ],
+    ).orderBy(date).persist()
 
     daily_path = os.path.join(output_dir, "daily_returns.csv")
     avg_path = os.path.join(output_dir, "average_daily_return.csv")
-    daily_sorted = daily.orderBy(F.col(f"`{date_col}`"))
-    if single_file:
-        write_single_csv(daily_sorted, daily_path)
-        write_single_csv(averages, avg_path)
-    else:
-        daily_sorted.write.mode("overwrite").option("header", "true").csv(daily_path)
-        averages.write.mode("overwrite").option("header", "true").csv(avg_path)
+    try:
+        # R12: global averages (NULL returns skipped by avg), with the
+        # row count folded into the same aggregate.
+        stats = daily.agg(
+            F.count(F.lit(1)).alias("__n"),
+            *[
+                F.avg(F.col(f"`{a}_Retorno`")).alias(f"Media_{a}_Retorno")
+                for a in assets
+            ],
+        )
+        averages = stats.drop("__n")
+        if single_file:
+            write_single_csv(daily, daily_path)
+            write_single_csv(averages, avg_path)
+        else:
+            daily.write.mode("overwrite").option("header", "true").csv(daily_path)
+            averages.write.mode("overwrite").option("header", "true").csv(avg_path)
 
-    # R16/R17: collected summary + empty-range signal.
-    n = daily.count()
-    avg_row = averages.first().asDict() if n else {}
+        # R16/R17: collected summary + empty-range signal.
+        row = stats.first().asDict()
+    finally:
+        daily.unpersist()
+    n = row.pop("__n")
     return {
         "daily_returns_count": n,
         "empty": n == 0,
-        "averages": avg_row,
+        "averages": row if n else {},
         "daily_returns_path": daily_path,
         "average_daily_return_path": avg_path,
         "assets": assets,

@@ -1,7 +1,8 @@
 """Golden test for the report runner (SURVEY.md §5.2): the exact
 R6-R13 reference pipeline on a market-data-shaped CSV, outputs checked
 value-by-value including the NULL-first-row and zero-divisor semantics,
-plus the empty-range branch and validation errors."""
+plus the empty-range branch, validation errors, the request's cache
+release and its Spark job budget."""
 
 from __future__ import annotations
 
@@ -33,6 +34,15 @@ def dataset(tmp_path):
 def _read_csv(path):
     with open(path, newline="") as f:
         return list(csv.DictReader(f))
+
+
+def _read_rows(path):
+    with open(path, newline="") as f:
+        return list(csv.reader(f))
+
+
+def _persistent_rdds(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 def test_golden_report(spark, dataset, tmp_path):
@@ -76,6 +86,16 @@ def test_empty_range_branch(spark, dataset, tmp_path):
         spark, dataset, "2030-01-01", "2030-12-31", os.path.join(str(tmp_path), "o")
     )
     assert res["empty"] and res["daily_returns_count"] == 0
+    assert res["averages"] == {}
+    # Header only: the range holds no rows.
+    assert _read_rows(res["daily_returns_path"]) == [
+        ["Date", "DOLAR", "S&P500", "DOLAR_Retorno", "S&P500_Retorno"]
+    ]
+    # A global aggregate over no rows is one row of NULLs (empty cells).
+    assert _read_rows(res["average_daily_return_path"]) == [
+        ["Media_DOLAR_Retorno", "Media_S&P500_Retorno"],
+        ["", ""],
+    ]
 
 
 def test_validation_errors(spark, dataset, tmp_path):
@@ -87,6 +107,16 @@ def test_validation_errors(spark, dataset, tmp_path):
     with pytest.raises(ValueError, match="no 'Fecha'"):
         run_report(spark, dataset, "2024-01-02", "2024-01-05", out, date_col="Fecha")
     validate_date("2024-02-29")  # leap day is fine
+    # strptime accepts unpadded fields; the report contract does not.
+    with pytest.raises(ValueError, match="yyyy-MM-dd"):
+        validate_date("2024-1-9")
+    # As strings "2024-1-9" > "2024-1-10"; the range is refused for its
+    # format, not reported as reversed.
+    with pytest.raises(ValueError, match="yyyy-MM-dd"):
+        run_report(spark, dataset, "2024-1-9", "2024-1-10", out)
+    # The order check compares dates: a range across a year boundary.
+    res = run_report(spark, dataset, "2023-12-31", "2024-01-01", out)
+    assert res["daily_returns_count"] == 1
 
 
 def test_multipart_output_mode(spark, dataset, tmp_path):
@@ -94,7 +124,42 @@ def test_multipart_output_mode(spark, dataset, tmp_path):
     res = run_report(
         spark, dataset, "2024-01-01", "2024-01-06", out, single_file=False
     )
-    # directory of part files, standard Spark layout
-    assert os.path.isdir(res["daily_returns_path"])
-    parts = [p for p in os.listdir(res["daily_returns_path"]) if p.startswith("part-")]
-    assert parts
+    # directories of part files, standard Spark layout
+    for key in ("daily_returns_path", "average_daily_return_path"):
+        assert os.path.isdir(res[key])
+        parts = [p for p in os.listdir(res[key]) if p.startswith("part-")]
+        assert parts
+
+
+def test_request_frees_its_cache(spark, dataset, tmp_path):
+    """``daily`` is persisted for one request only: freed after a
+    successful request and after one whose write fails."""
+    before = _persistent_rdds(spark)
+    run_report(spark, dataset, "2024-01-02", "2024-01-05", os.path.join(str(tmp_path), "ok"))
+    assert _persistent_rdds(spark) == before
+
+    blocker = os.path.join(str(tmp_path), "blocker")
+    with open(blocker, "w") as f:
+        f.write("a regular file, not a directory\n")
+    with pytest.raises(OSError):
+        run_report(spark, dataset, "2024-01-02", "2024-01-05", os.path.join(blocker, "out"))
+    assert _persistent_rdds(spark) == before
+
+
+def test_job_budget(spark, dataset, tmp_path):
+    """Guard against actions creeping back into the request. Measured at
+    7 jobs on Spark 4.1: two for the inferSchema read, one for the
+    window's shuffle map stage that builds the cached ``daily``, one for
+    the daily CSV write, two for the averages write (its aggregate's map
+    stage, then the write) and one for ``first()``."""
+    sc = spark.sparkContext
+    group = "test_runner_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        run_report(spark, dataset, "2024-01-02", "2024-01-05", os.path.join(str(tmp_path), "o"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # The status tracker is fed by the listener bus; drain it first.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 7
