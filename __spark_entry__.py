@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, "/root/repo")
 
 from bigdata_financial_reporting_spark.queries import oracle_sql_map, queries_map
-from bigdata_financial_reporting_spark.queries.driver_order import ordered_names
 from bigdata_financial_reporting_spark.session import pin_semantics
 
 
@@ -29,10 +28,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Dict order is driver-facing: round 1's driver truncated at the
-    first 50 keys, so never-checked / re-check keys are exported first
-    (see queries.driver_order)."""
-    base = queries_map()
+    """Every registry key in registry order, each wrapped so the
+    session's semantic pins are applied before the query builds."""
 
     def wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -41,9 +38,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return run
 
-    return {name: wrap(base[name]) for name in ordered_names()}
+    return {name: wrap(fn) for name, fn in queries_map().items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    oracles = oracle_sql_map()
-    return {name: oracles[name] for name in ordered_names() if name in oracles}
+    """DuckDB oracle SQL for every key that has one, in registry order."""
+    return oracle_sql_map()

@@ -1,10 +1,15 @@
-"""Fast single-key mirror of the driver's compare: run one or more
-registry keys Spark-vs-DuckDB on sf0.01 and print the per-key verdict.
-Does NOT touch LOCAL_CORRECTNESS.json — use gen_local_correctness.py
-for the full artifact.
+"""Single-key oracle check: run one or more registry keys Spark-vs-DuckDB
+at ``$SPARK_GRAFT_SF_DIR`` (default sf0.01) and print each verdict.
+
+The comparison is the one scripts/gen_local_correctness.py commits
+(``oracle_compare.fetch_spark``/``fetch_duck``/``compare_entry``/
+``entry_green``), so a key GREEN here is green in the full sweep. Does
+NOT touch LOCAL_CORRECTNESS.json.
 
 Usage:  python scripts/check_keys.py sim_quantize_int8 sim_centroid_per_label
         python scripts/check_keys.py --category similarity
+
+Exit code: 2 on an unknown or missing key, 1 if any key is red, else 0.
 """
 
 from __future__ import annotations
@@ -15,17 +20,24 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "tests"))
 
 import duckdb  # noqa: E402
-import numpy as np  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
+from bigdata_financial_reporting_spark.operators.cache import (  # noqa: E402
+    release_operator_caches,
+)
+from bigdata_financial_reporting_spark.oracle_compare import (  # noqa: E402
+    canon_rows,
+    col_kinds,
+    compare_entry,
+    entry_green,
+    fetch_duck,
+    fetch_spark,
+    tune_duck,
+)
 from bigdata_financial_reporting_spark.queries import QUERIES  # noqa: E402
-from bigdata_financial_reporting_spark.oracle_compare import tune_duck  # noqa: E402
 from bigdata_financial_reporting_spark.session import pin_semantics  # noqa: E402
-from test_dtype_parity import kind  # noqa: E402
-from test_oracle import canon_rows  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 TABLES = [
@@ -34,16 +46,27 @@ TABLES = [
 ]
 
 
-def main() -> None:
+def connect():
+    con = duckdb.connect()
+    tune_duck(con)
+    for t in TABLES:
+        path = os.path.join(SF_DIR, f"{t}.parquet")
+        # staged 10x tables are multi-file DIRECTORIES <t>.parquet/
+        pattern = f"{path}/*.parquet" if os.path.isdir(path) else path
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pattern}')")
+    return con
+
+
+def main() -> int:
     args = sys.argv[1:]
-    if args and args[0] == "--category":
+    if args[:1] == ["--category"] and len(args) == 2:
         names = [n for n, s in QUERIES.items() if s.category == args[1]]
     else:
         names = args
     unknown = [n for n in names if n not in QUERIES]
     if unknown or not names:
         print(f"unknown or missing keys: {unknown}")
-        sys.exit(2)
+        return 2
 
     spark = (
         SparkSession.builder.master("local[16]")
@@ -55,19 +78,6 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     pin_semantics(spark)
-
-    def connect():
-        c = duckdb.connect()
-        tune_duck(c)
-        for t in TABLES:
-            path = os.path.join(SF_DIR, f"{t}.parquet")
-            # staged 10x tables are multi-file DIRECTORIES <t>.parquet/
-            pattern = f"{path}/*.parquet" if os.path.isdir(path) else path
-            c.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pattern}')"
-            )
-        return c
-
     con = connect()
 
     failures = 0
@@ -75,59 +85,47 @@ def main() -> None:
         spec = QUERIES[name]
         t0 = time.time()
         try:
-            sp = spec.fn(spark, SF_DIR).toPandas()
+            s_cols, s_rows = fetch_spark(spec.fn(spark, SF_DIR))
             if spec.oracle is None:
-                print(f"{name}: rows_only rows={len(sp)} ({time.time()-t0:.1f}s)")
+                print(f"{name}: rows_only rows={len(s_rows)} ({time.time()-t0:.1f}s)")
                 continue
             try:
-                dp = con.execute(spec.oracle).df()
+                d_cols, d_rows = fetch_duck(con, spec.oracle)
             except duckdb.Error:
                 # allocator-state-dependent OOM after a heavy oracle
                 # (round-7 sweep lesson) — retry once on a fresh
                 # connection before reporting an error
                 con.close()
                 con = connect()
-                dp = con.execute(spec.oracle).df()
-
-            def cell(v):
-                return list(v) if isinstance(v, np.ndarray) else v
-
-            s_rows = [tuple(cell(x) for x in r) for r in sp.itertuples(index=False)]
-            d_rows = [tuple(cell(x) for x in r) for r in dp.itertuples(index=False)]
-            rows = len(sp) == len(dp)
-            schema = sorted(sp.columns) == sorted(dp.columns)
-            values = canon_rows(list(sp.columns), s_rows) == canon_rows(
-                list(dp.columns), d_rows
-            )
-            kinds = schema and all(kind(sp[c]) == kind(dp[c]) for c in sp.columns)
-            ok = rows and schema and values and kinds
+                d_cols, d_rows = fetch_duck(con, spec.oracle)
+            entry = compare_entry(s_cols, s_rows, d_cols, d_rows)
+            ok = entry_green(entry)
             failures += 0 if ok else 1
+            flags = " ".join(f"{k}={v}" for k, v in entry.items())
             print(
-                f"{name}: {'GREEN' if ok else 'FAIL'} rows={len(sp)}/{len(dp)} "
-                f"schema={schema} values={values} kinds={kinds} "
-                f"({time.time()-t0:.1f}s)"
+                f"{name}: {'GREEN' if ok else 'FAIL'} "
+                f"rows={len(s_rows)}/{len(d_rows)} {flags} ({time.time()-t0:.1f}s)"
             )
-            if not ok:
-                if not schema:
-                    print(f"  spark cols: {sorted(sp.columns)}")
-                    print(f"  duck  cols: {sorted(dp.columns)}")
-                elif not values:
-                    sc = canon_rows(list(sp.columns), s_rows)
-                    dc = canon_rows(list(dp.columns), d_rows)
-                    diff_s = [r for r in sc if r not in set(dc)][:3]
-                    diff_d = [r for r in dc if r not in set(sc)][:3]
-                    print(f"  spark-only rows (≤3): {diff_s}")
-                    print(f"  duck-only  rows (≤3): {diff_d}")
-                elif not kinds:
-                    for c in sp.columns:
-                        if kind(sp[c]) != kind(dp[c]):
-                            print(f"  col {c}: spark={kind(sp[c])} duck={kind(dp[c])}")
+            if not entry["schema_match"]:
+                print(f"  spark cols: {sorted(s_cols)}")
+                print(f"  duck  cols: {sorted(d_cols)}")
+            elif not entry["values_match"]:
+                sc, dc = canon_rows(s_cols, s_rows), canon_rows(d_cols, d_rows)
+                s_set, d_set = set(sc), set(dc)
+                print(f"  spark-only rows (≤3): {[r for r in sc if r not in d_set][:3]}")
+                print(f"  duck-only  rows (≤3): {[r for r in dc if r not in s_set][:3]}")
+            elif not ok:
+                print(f"  spark kinds: {col_kinds(s_cols, s_rows)}")
+                print(f"  duck  kinds: {col_kinds(d_cols, d_rows)}")
         except Exception as exc:
             failures += 1
             print(f"{name}: ERROR {type(exc).__name__}: {exc}")
+        finally:
+            release_operator_caches()
+    con.close()
     spark.stop()
-    sys.exit(1 if failures else 0)
+    return 1 if failures else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -1,6 +1,6 @@
-"""Emit LOCAL_CORRECTNESS.json — the builder's full mirror of the
-driver's t2 gate, covering EVERY registry key (the external driver
-truncates at ~50 keys per round).
+"""Emit LOCAL_CORRECTNESS.json — the full mirror of the driver's t2
+gate, covering EVERY registry key (scripts/check_keys.py runs the same
+comparison for chosen keys).
 
 Per query: Spark vs DuckDB row count, column-name set, the
 driver-strict canonical value match, and per-column type-kind parity —

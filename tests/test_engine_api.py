@@ -143,10 +143,10 @@ def test_try_arithmetic_null_path_exists_at_test_sf(spark, sf_dir):
 
 
 def test_bench_headline_keys_resolve_in_registry():
-    """bench.py's HEADLINE list is hand-rotated every round; a typo'd
-    or renamed key would crash the driver's per-round bench run (the
-    BENCH_r{N} artifact) instead of failing here first. Import the
-    list without importing the runner's Spark session."""
+    """bench.py's HEADLINE list is maintained by hand; a typo'd or
+    renamed key would crash a ``python bench.py`` run instead of
+    failing here first. Import the list without importing the runner's
+    Spark session."""
     import importlib.util
     from pathlib import Path
 
@@ -161,3 +161,16 @@ def test_bench_headline_keys_resolve_in_registry():
     unknown = [n for n in bench.HEADLINE if n not in registry]
     assert not unknown, f"bench HEADLINE names not in registry: {unknown}"
     assert len(set(bench.HEADLINE)) == len(bench.HEADLINE), "duplicate keys"
+
+
+def test_entry_exports_registry_order():
+    """The driver contract exports the registry as it is: every key, in
+    registry order, and an oracle for exactly the keys that have one."""
+    import __spark_entry__
+
+    from bigdata_financial_reporting_spark.queries import QUERIES
+
+    assert list(__spark_entry__.queries()) == list(QUERIES)
+    assert list(__spark_entry__.oracle_sql()) == [
+        k for k, s in QUERIES.items() if s.oracle is not None
+    ]

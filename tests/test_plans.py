@@ -87,26 +87,39 @@ def test_scalable_global_lag_avoids_single_partition(spark, sf_dir):
     assert "rangepartitioning" in physical_plan(df)
 
 
-def test_no_cartesian_products_anywhere(spark, sf_dir):
+@pytest.fixture(scope="module")
+def registry_plans(spark, sf_dir):
+    """Every non-streaming physical plan, built once and shared by the
+    two registry-wide sweeps below. Caches are cleared first for the
+    same reason as ``_fresh_plans`` (this fixture is set up before it)."""
+    from bigdata_financial_reporting_spark.operators.cache import (
+        release_operator_caches,
+    )
+
+    release_operator_caches()
+    spark.catalog.clearCache()
+    return {
+        name: (spec, physical_plan(spec.fn(spark, sf_dir)))
+        for name, spec in QUERIES.items()
+        if spec.category != "streaming"
+    }
+
+
+def test_no_cartesian_products_anywhere(registry_plans):
     """CartesianProduct (unbroadcast cross join) is never acceptable;
     bounded cross joins must ride a broadcast."""
-    for name, spec in QUERIES.items():
-        if spec.category == "streaming":
-            continue
-        df = spec.fn(spark, sf_dir)
-        assert "CartesianProduct" not in physical_plan(df), name
+    for name, (_, plan) in registry_plans.items():
+        assert "CartesianProduct" not in plan, name
 
 
-def test_no_rowbased_python_udfs_outside_udf_family(spark, sf_dir):
-    """Python-in-the-row-path is quarantined to the explicit UDF
-    queries; every other operator must stay JVM-side."""
-    for name, spec in QUERIES.items():
-        if spec.category in ("udf", "streaming") or name.startswith("udf_"):
+def test_no_rowbased_python_udfs_outside_udf_family(registry_plans):
+    """Python-in-the-row-path (BatchEvalPython) is quarantined to the
+    explicit UDF queries and the multimodal codecs (pandas UDFs by
+    design); every other operator must stay JVM-side."""
+    for name, (spec, plan) in registry_plans.items():
+        if spec.category == "udf" or name.startswith(("udf_", "mm_")):
             continue
-        if name.startswith("mm_"):  # multimodal codecs are pandas UDFs by design
-            continue
-        r = plan_report(spec.fn(spark, sf_dir))
-        assert not r["rowbased_python_udf"], f"{name} fell back to row-based Python"
+        assert "BatchEvalPython" not in plan, f"{name} fell back to row-based Python"
 
 
 def test_tpch_q5_broadcasts_dim_chain(spark, sf_dir):
