@@ -12,8 +12,9 @@ parameters accumulate entries across a long session (round-2 ADVICE).
 Contract: operators register such frames here via ``track``; callers
 that run many different queries in one session call
 ``release_operator_caches()`` at safe points (after an action has
-materialized the plans they care about). ``bench.py`` does this after
-each timed query.
+materialized the plans they care about).
+``perfbench/workloads.registry_op`` does this after each operation, and
+``scripts/check_keys.py`` between keys.
 """
 
 from __future__ import annotations

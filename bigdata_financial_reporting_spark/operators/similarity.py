@@ -20,9 +20,10 @@ canonicalized plan, so re-running the same query shares one entry,
 but DISTINCT inputs or parameters in one session accumulate entries
 until released: any long-lived caller must follow the repo-wide
 ``release_operator_caches()`` contract (call after the returned
-plans' consumers have materialized — bench.py and the correctness
-harnesses do). Before round 14 only signature/bucket frames were
-persisted; these operators are no longer stateless in that sense.
+plans' consumers have materialized —
+``perfbench/workloads.registry_op`` and the correctness harnesses do).
+Before round 14 only signature/bucket frames were persisted; these
+operators are no longer stateless in that sense.
 """
 
 from __future__ import annotations
@@ -427,6 +428,113 @@ def lsh_bucket_topk(
     return _keep_topk(scored, k)
 
 
+def _lowest_id_book(
+    df: DataFrame, id_col: str, vec_col: str, n_codes: int,
+    n_subspaces: int, caller: str,
+) -> dict:
+    """The ONE deterministic Lloyd init, in one collect: each
+    subspace's entries are the ``n_codes`` lowest-id vectors'
+    subvectors (no RNG), keyed ``(s, code)`` as :func:`_lloyd` expects.
+    The same rows carry the dimension, so there is no separate probe
+    job. An empty input raises instead of training an empty book that
+    would silently match nothing downstream."""
+    init = (
+        df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
+        .orderBy("vid")
+        .limit(n_codes)
+        .collect()
+    )
+    if not init:
+        raise ValueError(f"{caller}: input frame is empty")
+    dim = len(init[0].v)
+    if dim % n_subspaces != 0:
+        raise ValueError(
+            f"{caller}: vector length {dim} must be divisible "
+            f"by n_subspaces={n_subspaces}"
+        )
+    sub_dim = dim // n_subspaces
+    return {
+        (s, i): [float(x) for x in r.v[s * sub_dim : (s + 1) * sub_dim]]
+        for i, r in enumerate(init)
+        for s in range(n_subspaces)
+    }
+
+
+def _lloyd(
+    units: DataFrame, book: dict, nearest, iterations: int
+) -> DataFrame:
+    """The ONE deterministic Lloyd loop, under both ``train_centroids``
+    (one subspace, whole vectors, cosine) and ``train_pq_codebook``
+    (per-subspace subvectors, squared L2).
+
+    ``book`` maps ``(s, code)`` to the entry's sub_dim floats. Each
+    iteration rebuilds the model-sized ``(s, code, cv)`` frame — ``cv``
+    zero-padded to the full dimension with the entry at subspace s's
+    slice, the layout ``pq_encode`` reads — and ``nearest(units,
+    frame)`` returns every unit's winning ``(s, code, sv)``, ``sv``
+    being the unit's s-th subvector. Each entry's mean is then ONE
+    map-side-combined (s, code) aggregation, rounded to 9 dp so
+    accumulation-order noise (~1e-16) cannot make reruns diverge; an
+    empty cell keeps its previous entry. The model state collected
+    between iterations is the book itself (16 x 64 doubles here) — the
+    textbook small-model pattern; all data-sized work is distributed.
+    ``units`` is persisted for the loop and freed in ``finally``.
+
+    Returns the final ``(s, code, cv)`` frame.
+
+    (Alternatives tried and REJECTED, kept for the record:
+    literal-inlined book expressions — 15k-node plan, ~30 s Catalyst
+    time per iteration; a fully-fused lazy iteration chain — AQE
+    materializes each computed broadcast as its own stage plus a
+    carry-forward join, costing more than the per-iteration collect
+    and re-create it saved; and a zero-shuffle map-side
+    ``F.aggregate`` argmin fold — higher-order functions drop the
+    projection out of whole-stage codegen and measured ~2.4x slower
+    end-to-end at sf0.1.)"""
+    spark = units.sparkSession
+    n_sub = 1 + max(s for s, _ in book)
+    sub_dim = len(next(iter(book.values())))
+
+    def frame(book):
+        return spark.createDataFrame(
+            [
+                (s, c, [0.0] * (s * sub_dim) + v
+                 + [0.0] * ((n_sub - 1 - s) * sub_dim))
+                for (s, c), v in sorted(book.items())
+            ],
+            "s int, code int, cv array<double>",
+        )
+
+    units = units.persist()
+    try:
+        for _ in range(iterations):
+            per = nearest(units, frame(book)).groupBy("s", "code").agg(
+                *[
+                    F.round(
+                        F.avg(F.element_at("sv", i + 1).cast("double")), 9
+                    ).alias(f"m{i}")
+                    for i in range(sub_dim)
+                ]
+            )
+            new = {
+                (r["s"], r["code"]): [r[f"m{i}"] for i in range(sub_dim)]
+                for r in per.collect()
+            }
+            book = {key: new.get(key, v) for key, v in book.items()}
+    finally:
+        units.unpersist()
+    return frame(book)
+
+
+def _as_cents(book: DataFrame) -> DataFrame:
+    """A one-subspace :func:`_lloyd` book as the IVF centroid frame."""
+    return book.select(
+        F.col("code").alias("cent_id"),
+        F.col("cv").alias("__cent"),
+        l2_norm(F.col("cv")).alias("__centn"),
+    )
+
+
 def train_centroids(
     corpus: DataFrame,
     corpus_id: str,
@@ -437,74 +545,31 @@ def train_centroids(
     """Deterministic spherical k-means (Lloyd) — real IVF training.
 
     Init: the ``n_centroids`` corpus vectors with the lowest ids (no
-    RNG). Each iteration: assign every vector to its max-cosine
-    centroid (broadcast join, ties to the lower cent_id), then recompute
-    each cell's mean via posexplode + one map-side-combined
-    (cell, pos) aggregation — vectors never cross the shuffle whole,
-    mirroring sim_centroid_per_label. Empty cells keep their previous
-    centroid. Components are rounded to 9 decimals so float
-    accumulation-order noise (~1e-16) cannot make reruns diverge.
-
-    The k x dim model state is collected to the driver between
-    iterations (16 x 64 doubles here) — the textbook small-model
-    pattern; the data-sized work is all distributed.
+    RNG). Each :func:`_lloyd` iteration assigns every vector to its
+    max-cosine centroid with :func:`_nearest_cells` (broadcast join,
+    ties to the lower cent_id), then recomputes each cell's mean.
+    Raises ``ValueError`` on an empty corpus.
 
     Returns ``(cent_id, __cent, __centn)`` ready for ``ivf_topk``.
     """
-    spark = corpus.sparkSession
-    base = corpus.select(
+    units = corpus.select(
         F.col(corpus_id).alias("vid"),
         F.col(vec_col).alias("cv"),
         l2_norm(F.col(vec_col)).alias("cn"),
     )
-    init = base.orderBy("vid").limit(n_centroids).collect()
-    cents_rows = [
-        (i, [float(x) for x in r.cv]) for i, r in enumerate(init)
-    ]
 
-    assign_w = Window.partitionBy("vid").orderBy(
-        F.col("__sim").desc(), F.col("cent_id").asc()
+    def nearest(units, book):
+        return _nearest_cells(
+            units, "vid", "cv", "cn", _as_cents(book), 1
+        ).select(
+            F.lit(0).alias("s"), F.col("cell").alias("code"),
+            F.col("cv").alias("sv"),
+        )
+
+    book = _lowest_id_book(
+        corpus, corpus_id, vec_col, n_centroids, 1, "train_centroids"
     )
-    for _ in range(iterations):
-        cents = spark.createDataFrame(
-            cents_rows, "cent_id int, __cent array<double>"
-        ).withColumn("__centn", l2_norm(F.col("__cent")))
-        assigned = (
-            base.join(F.broadcast(cents))
-            .withColumn(
-                "__sim",
-                _cosine_with_norms(
-                    F.col("cv"), F.col("__cent"), F.col("cn"), F.col("__centn")
-                ),
-            )
-            .withColumn("__rn", F.row_number().over(assign_w))
-            .filter(F.col("__rn") == 1)
-            .select(F.col("cent_id").alias("cell"), "vid", "cv")
-        )
-        per = (
-            assigned.select("cell", F.posexplode("cv").alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg(F.round(F.avg(F.col("x").cast("double")), 9).alias("m"))
-        )
-        new_rows = {
-            r.cell: r.vec
-            for r in per.groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s.getField("m"),
-                ).alias("vec")
-            )
-            .collect()
-        }
-        cents_rows = [
-            (cid, new_rows.get(cid, vec)) for cid, vec in cents_rows
-        ]
-
-    cents = spark.createDataFrame(
-        cents_rows, "cent_id int, __cent array<double>"
-    ).withColumn("__centn", l2_norm(F.col("__cent")))
-    return cents
+    return _as_cents(_lloyd(units, book, nearest, iterations))
 
 
 def _degenerate_centroids(
@@ -554,7 +619,8 @@ def _nearest_cells(
     hash-agg traverse rows in the same order with the same tie-break,
     so the carried payload columns stay mutually consistent. n_keep>1
     (the probe side — query-sized, never corpus-sized) keeps the
-    window."""
+    window and its row number as ``cell_rank``: ``cell_rank <= p`` is
+    the p-probe ring for every p at once."""
     joined = rows.join(F.broadcast(cents)).withColumn(
         "__sim",
         _cosine_with_norms(
@@ -576,9 +642,9 @@ def _nearest_cells(
         F.col("__sim").desc(), F.col("cent_id").asc()
     )
     return (
-        joined.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= n_keep)
-        .select(*rows.columns, F.col("cent_id").alias("cell"))
+        joined.withColumn("cell_rank", F.row_number().over(w))
+        .filter(F.col("cell_rank") <= n_keep)
+        .select(*rows.columns, F.col("cent_id").alias("cell"), "cell_rank")
     )
 
 
@@ -720,26 +786,9 @@ def ivf_probe_sweep(
             l2_norm(F.col(vec_col)).alias("__qn"),
         ).persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # ranked probes: _nearest_cells' selection with the rank KEPT —
-    # cell_rank <= p reproduces the p-probe ring for every p at once
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__sim").desc(), F.col("cent_id").asc()
-    )
-    probes = (
-        q.join(F.broadcast(cents))
-        .withColumn(
-            "__sim",
-            _cosine_with_norms(
-                F.col("__qv"), F.col("__cent"), F.col("__qn"), F.col("__centn")
-            ),
-        )
-        .withColumn("cell_rank", F.row_number().over(w))
-        .filter(F.col("cell_rank") <= max_p)
-        .select(
-            "query_id", "__qv", "__qn",
-            F.col("cent_id").alias("cell"), "cell_rank",
-        )
-    )
+    probes = _nearest_cells(q, "query_id", "__qv", "__qn", cents, max_p)
+    if max_p == 1:  # the max_by branch: every kept cell is rank 1
+        probes = probes.withColumn("cell_rank", F.lit(1))
 
     # shared by the candidate-count and recall branches: persisted so
     # the assign+score pipeline runs once, not once per consumer
@@ -1042,7 +1091,8 @@ def lsh_blocked_pairs(
     Cache lifetime: the band-bucket frame is persisted (multiple
     consumers in this one plan) and registered with operators.cache —
     long-running sessions call ``release_operator_caches()`` between
-    unrelated queries (bench.py does).
+    unrelated queries (``perfbench/workloads.registry_op`` and the
+    correctness harnesses do).
 
     ``method``: ``"expr"`` (default) computes each band bucket as a
     Catalyst expression — zero Python anywhere; ``"arrow"`` computes
@@ -1290,11 +1340,12 @@ def semantic_dedup(
     degenerate quantizer as ``ivf_topk``, which keeps the whole
     dataflow exactly reproducible in a SQL oracle).
 
-    Plan: one broadcast join for assignment (centroid frame is
-    model-sized), one hash shuffle on the cluster id, per-cluster
-    self-join bounded by the largest cell. Returns one row per input:
-    (id, cell, is_kept, dup_of) with ``dup_of`` the lowest same-cell
-    id that evicted the row (NULL when kept)."""
+    Plan: one broadcast join for assignment (:func:`_nearest_cells`;
+    the centroid frame is model-sized), one hash shuffle on the
+    cluster id, per-cluster self-join bounded by the largest cell.
+    Returns one row per input: (id, cell, is_kept, dup_of) with
+    ``dup_of`` the lowest same-cell id that evicted the row (NULL when
+    kept)."""
     # Scan discipline (optimization round 14): the assigned-cell frame
     # feeds THREE consumers (both intra-cell pair sides + the final
     # keep join), and the internally-built centroid frame is evaluated
@@ -1305,35 +1356,19 @@ def semantic_dedup(
         cents = centroids
     else:
         cents = track(
-            df.select(
-                F.col(id_col).alias("cent_id"),
-                F.col(vec_col).alias("__cent"),
-                l2_norm(F.col(vec_col)).alias("__centn"),
+            _degenerate_centroids(df, id_col, vec_col, n_clusters).persist(
+                StorageLevel.MEMORY_AND_DISK
             )
-            .orderBy("cent_id")
-            .limit(n_clusters)
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
     base = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
         l2_norm(F.col(vec_col)).alias("n"),
     )
-    assign_w = Window.partitionBy("id").orderBy(
-        F.col("__sim").desc(), F.col("cent_id").asc()
-    )
     cells = track(
-        base.join(F.broadcast(cents))
-        .withColumn(
-            "__sim",
-            _cosine_with_norms(
-                F.col("v"), F.col("__cent"), F.col("n"), F.col("__centn")
-            ),
+        _nearest_cells(base, "id", "v", "n", cents, 1).persist(
+            StorageLevel.MEMORY_AND_DISK
         )
-        .withColumn("__rn", F.row_number().over(assign_w))
-        .filter(F.col("__rn") == 1)
-        .select("id", "v", "n", F.col("cent_id").alias("cell"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     a = cells.select(
         F.col("cell"),
@@ -1666,159 +1701,49 @@ def train_pq_codebook(
     quantizes under).
 
     Init: each subspace's entries are the ``n_codes`` lowest-id
-    vectors' subvectors (no RNG); the same collect carries the
-    dimension, so init is one job. Each iteration: assign every
-    subvector to its min-distance entry (broadcast join of the
-    model-sized book, in-order distance fold, ties to the lower
-    code), then recompute entry means per (subspace, code, pos) with
-    ONE map-side-combined hash aggregation — subvectors never cross
-    a shuffle whole — rounded to 9 dp so accumulation-order noise
-    cannot make reruns diverge; empty cells keep their previous
-    entry. The model state collected between iterations is
-    n_subspaces x n_codes x sub_dim doubles (8x16x8 here) — the
-    textbook small-model pattern, all data-sized work distributed,
-    one job and two exchanges per Lloyd iteration (both with
-    map-side partial aggregation, so only group-collapsed rows cross
-    either shuffle).
+    vectors' subvectors (no RNG, one job; an empty input raises
+    ``ValueError``). Each :func:`_lloyd` iteration assigns every
+    subvector to its min-distance entry — broadcast join of the
+    model-sized book, :func:`_pq_subspace_d2`'s in-order distance
+    fold, :func:`_pq_argmin_ord` (ties to the lower code, a NULL
+    distance never beats a non-NULL one) as a min_by hash aggregation
+    with map-side partials — then recomputes each entry's mean.
 
     Returns the ``(s, code, cv)`` frame ``pq_encode`` expects, with
     each entry embedded at its subspace's slice of a zero-padded
     full-dim vector (so the encoder's shared indexing applies
-    unchanged).
-
-    Deliberately mirrors ``train_centroids``' deterministic-Lloyd
-    scaffolding (lowest-id init, lower-id tie-break, 9-dp-rounded
-    means, empty-cell carry-forward, small-model collect between
-    iterations); the two differ in metric (squared L2 vs cosine) and
-    unit (subvector-per-subspace vs whole vector). A change to the
-    shared determinism contract must be applied to BOTH."""
-    spark = df.sparkSession
-    base = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
-
-    # ONE init job: the lowest-id rows seed the book AND carry the
-    # dimension (the former separate first() dim-probe job was pure
-    # sequential-latency overhead — round-12 verdict item 5).
-    init = base.orderBy("vid").limit(n_codes).collect()
-    if not init:
-        raise ValueError("train_pq_codebook: input frame is empty")
-    dim = len(init[0].v)
-    if dim % n_subspaces != 0:
-        raise ValueError(
-            f"train_pq_codebook: vector length {dim} must be divisible "
-            f"by n_subspaces={n_subspaces}"
-        )
-    sub_dim = dim // n_subspaces
-
-    # {(s, code): [sub_dim floats]}
-    book = {
-        (s, i): [float(x) for x in r.v[s * sub_dim : (s + 1) * sub_dim]]
-        for i, r in enumerate(init)
-        for s in range(n_subspaces)
-    }
-
-    sub = base.select(
-        "vid",
-        "v",
-        F.explode(F.array(*[F.lit(s) for s in range(n_subspaces)])).alias("s"),
-    ).select(
-        "vid",
-        "s",
-        F.transform(
-            F.slice(
-                F.col("v"), F.col("s") * sub_dim + F.lit(1), F.lit(sub_dim)
-            ),
-            lambda x: x.cast("double"),
-        ).alias("sv"),
+    unchanged)."""
+    units = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
+    book = _lowest_id_book(
+        df, id_col, vec_col, n_codes, n_subspaces, "train_pq_codebook"
     )
+    sub_dim = len(book[0, 0])
 
-    def d2(sv, cv):
-        # unrolled left-to-right codegen sum — identical IEEE order
-        # and NULL propagation to the zip_with/aggregate fold it
-        # replaces (shorter-array element_at -> NULL poisons the sum,
-        # as zip_with's null-padding did), without the interpreted
-        # lambda on the n_rows x n_subspaces x n_codes hot pass
-        acc = F.lit(0.0)
-        for i in range(1, sub_dim + 1):
-            diff = F.element_at(sv, i) - F.element_at(cv, i)
-            acc = acc + diff * diff
-        return acc
+    def nearest(units, book):
+        sv = F.slice(F.col("v"), F.col("s") * sub_dim + 1, sub_dim)
+        return (
+            units.select(
+                "vid",
+                "v",
+                F.explode(
+                    F.array(*[F.lit(s) for s in range(n_subspaces)])
+                ).alias("s"),
+            )
+            .join(F.broadcast(book), "s")
+            .withColumn(
+                "d2",
+                _pq_subspace_d2(F.col("v"), F.col("cv"), F.col("s"), sub_dim),
+            )
+            .groupBy("vid", "s")
+            .agg(
+                F.min_by(
+                    F.struct("code", sv.alias("sv")), _pq_argmin_ord()
+                ).alias("__b")
+            )
+            .select("s", "__b.code", "__b.sv")
+        )
 
-    # argmin via min_by (pq_encode's shared determinism contract:
-    # NULL distance — ragged vector -> zip_with null-padding — must
-    # never win, or code 0 silently absorbs the ragged row and
-    # pollutes the trained means). The ordering struct leads with an
-    # is-null flag instead of coalescing NULL to +inf, because +inf
-    # sorts BELOW NaN and the coalesce form would let a former-NULL
-    # candidate beat a NaN one — flipping the old asc_nulls_last
-    # precedence (round-11 advice; same fix as pq_encode's argmin).
-    # Hash agg with map-side partials replaces the per-(vid, s)
-    # sort — partial aggregation collapses the n_codes candidates per
-    # group map-side, so the exchange carries only corpus x
-    # n_subspaces best-rows. (Alternatives tried and REJECTED, kept
-    # for the record: literal-inlined codebook expressions — 15k-node
-    # plan, ~30 s Catalyst time per iteration; a fully-fused lazy
-    # iteration chain — AQE materializes each computed broadcast as
-    # its own stage plus a carry-forward join, costing more than the
-    # 128-row collect + literal re-create per iteration it saved; and
-    # round 13's zero-shuffle map-side F.aggregate argmin fold —
-    # higher-order functions drop the projection out of whole-stage
-    # codegen and the interpreted d2 evals measured ~2.4x slower
-    # end-to-end than this codegen'd join + min_by at sf0.1. The
-    # per-iteration collect is model-sized driver state, the textbook
-    # Lloyd pattern.)
-    sub = sub.persist()
-    try:
-        for _ in range(iterations):
-            cb = spark.createDataFrame(
-                [(s, c, v) for (s, c), v in sorted(book.items())],
-                "s int, code int, cv array<double>",
-            )
-            assigned = (
-                sub.join(F.broadcast(cb), "s")
-                .withColumn("__d2", d2(F.col("sv"), F.col("cv")))
-                .groupBy("vid", "s")
-                .agg(
-                    F.min_by(
-                        F.struct("code", "sv"),
-                        F.struct(
-                            F.col("__d2").isNull(),
-                            F.coalesce(F.col("__d2"), F.lit(0.0)),
-                            F.col("code"),
-                        ),
-                    ).alias("__b")
-                )
-                .select(
-                    "s",
-                    F.col("__b.code").alias("code"),
-                    F.col("__b.sv").alias("sv"),
-                )
-            )
-            # per-entry means in ONE hash aggregation (map-side
-            # partials; only 9-dp-rounded sums cross the shuffle) —
-            # the former posexplode + two-stage groupBy spent two
-            # extra exchanges per iteration on the same result.
-            per = assigned.groupBy("s", "code").agg(
-                *[
-                    F.round(
-                        F.avg(F.element_at(F.col("sv"), i + 1)), 9
-                    ).alias(f"m{i}")
-                    for i in range(sub_dim)
-                ]
-            )
-            new = {
-                (r["s"], r["code"]): [r[f"m{i}"] for i in range(sub_dim)]
-                for r in per.collect()
-            }
-            book = {key: new.get(key, v) for key, v in book.items()}
-    finally:
-        sub.unpersist()
-
-    rows = []
-    for (s, c), v in sorted(book.items()):
-        full = [0.0] * dim
-        full[s * sub_dim : (s + 1) * sub_dim] = v
-        rows.append((s, c, full))
-    return spark.createDataFrame(rows, "s int, code int, cv array<double>")
+    return _lloyd(units, book, nearest, iterations)
 
 
 def hadamard_rotate(

@@ -595,7 +595,7 @@ def split_contamination(spark, sf_dir):
     # Persisted: the train and test branches would otherwise each
     # re-run the full shingle pipeline (posexplode + per-doc window) —
     # measured 2x wall at the 10x corpus. Registered with
-    # operators.cache (caller-released, see bench.py).
+    # operators.cache (caller-released, see perfbench/workloads.registry_op).
     sh = track(
         shingle_rows(
             d, "doc_id", "text", 3, extra=[_split_col().alias("split")]

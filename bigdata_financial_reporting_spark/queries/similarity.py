@@ -376,8 +376,9 @@ def sim_centroid_per_label(spark, sf_dir):
 )
 def sim_ivf_trained_topk(spark, sf_dir):
     """IVF ANN with REAL trained centroids: deterministic spherical
-    k-means (lowest-id init, 2 Lloyd iterations, broadcast assignment,
-    posexplode mean update) replaces the degenerate lowest-id coarse
+    k-means (lowest-id init, 2 iterations of operators.similarity's
+    shared ``_lloyd`` loop: broadcast assignment, one per-cell mean
+    aggregation) replaces the degenerate lowest-id coarse
     quantizer — the full IVF dataflow a production index build runs.
     Recall vs brute force and rerun-determinism asserted in
     test_llm_ops.py. Deterministic by construction (lowest-id init,
@@ -1235,8 +1236,8 @@ _DUCK_SUB_D2 = (
 #: oracle: assign every (vid, s) subvector to its min-d2 entry of
 #: {prev} (ties to the lower code, NULLs last — DuckDB's ASC default),
 #: recompute per-(s, code, pos) means rounded to 9 dp, carry empty
-#: cells forward. Mirrors operators.similarity.train_pq_codebook's
-#: iteration body stage for stage.
+#: cells forward. Mirrors one iteration of operators.similarity._lloyd
+#: as train_pq_codebook drives it, stage for stage.
 _DUCK_PQ_LLOYD = """
     asg{n} AS (
       SELECT vid, s, sv, code,

@@ -51,7 +51,17 @@ def _smoke_subset(specs):
     return keep
 
 
-_ORACLE_SMOKE = _smoke_subset(ORACLE_SPECS)
+#: Oracle keys run in the default tier on top of the per-category
+#: smoke: the IVF/PQ family and SemDeDup, which share the quantizer
+#: core of operators/similarity.py (the ``_lloyd`` training loop and
+#: the ``_nearest_cells`` assignment step). Each takes ~1-5 s.
+_QUANTIZER_KEYS = {
+    "sim_ivf_topk", "sim_ivf_trained_topk", "sim_ivf_probe_sweep",
+    "sim_pq_encode", "sim_opq_rotation_encode",
+    "sim_ivfpq_residual_encode", "sim_ivfpq_topk", "sim_ivfpq_trained_topk",
+    "dedup_semantic_semdedup",
+}
+_ORACLE_SMOKE = _smoke_subset(ORACLE_SPECS) | _QUANTIZER_KEYS
 _ROWS_SMOKE = _smoke_subset(ROWS_ONLY_SPECS)
 
 
