@@ -1,13 +1,16 @@
 """Golden test for the report runner (SURVEY.md §5.2): the exact
 R6-R13 reference pipeline on a market-data-shaped CSV, outputs checked
 value-by-value including the NULL-first-row and zero-divisor semantics,
-plus the empty-range branch, validation errors, the request's cache
-release and its Spark job budget."""
+plus the empty-range branch, validation errors, asset names that need
+quoting, non-numeric asset columns, per-phase timings, the request's
+cache release and its Spark job and Py4J budgets."""
 
 from __future__ import annotations
 
 import csv
+import gc
 import os
+import time
 
 import pytest
 
@@ -23,12 +26,27 @@ CSV_CONTENT = """Date,DOLAR,S&P500
 """
 
 
+# Header names that need CSV quoting, SQL quoting or both; the last one
+# holds a backtick, which must be doubled inside a quoted identifier.
+SPECIAL_CSV = (
+    "Date,\"A,B\",\"say \\\"hi\\\"\",it's,back\\slash,BRK.B,S&P500,my asset,A`B\n"
+    "2024-01-01,1,2,4,10,5,8,1,2\n"
+    "2024-01-02,2,3,2,10,10,4,3,1\n"
+    "2024-01-03,4,6,3,5,5,8,6,3\n"
+)
+SPECIAL_NAMES = ["A,B", 'say "hi"', "it's", "back\\slash", "BRK.B", "S&P500", "my asset", "A`B"]
+
+
+def _write(tmp_path, name, text):
+    p = os.path.join(str(tmp_path), name)
+    with open(p, "w") as f:
+        f.write(text)
+    return p
+
+
 @pytest.fixture()
 def dataset(tmp_path):
-    p = os.path.join(str(tmp_path), "market_data.csv")
-    with open(p, "w") as f:
-        f.write(CSV_CONTENT)
-    return p
+    return _write(tmp_path, "market_data.csv", CSV_CONTENT)
 
 
 def _read_csv(path):
@@ -39,6 +57,11 @@ def _read_csv(path):
 def _read_rows(path):
     with open(path, newline="") as f:
         return list(csv.reader(f))
+
+
+def _lines(path):
+    with open(path, newline="") as f:
+        return f.read().split("\n")
 
 
 def _persistent_rdds(spark):
@@ -98,6 +121,98 @@ def test_empty_range_branch(spark, dataset, tmp_path):
     ]
 
 
+@pytest.mark.parametrize(
+    "initial, final, n",
+    [("2024-01-02", "2024-01-02", 1), ("2030-01-01", "2030-12-31", 0)],
+    ids=["one_row", "empty"],
+)
+def test_single_asset_null_average(spark, tmp_path, initial, final, n):
+    """One asset whose average is NULL (a one-row range has no return to
+    average; an empty range has no rows): Spark's CSV writer writes such
+    a one-field row as nothing, so the averages file is its header line
+    alone."""
+    path = _write(tmp_path, "one.csv", "Date,X\n2024-01-01,1.0\n2024-01-02,2.0\n")
+    res = run_report(spark, path, initial, final, os.path.join(str(tmp_path), "o"))
+    assert res["daily_returns_count"] == n
+    assert res["averages"] == ({"Media_X_Retorno": None} if n else {})
+    with open(res["average_daily_return_path"], newline="") as f:
+        assert f.read() == "Media_X_Retorno\n"
+    with open(res["daily_returns_path"], newline="") as f:
+        assert f.read() == "Date,X,X_Retorno\n" + ("2024-01-02,2.0,\n" if n else "")
+
+
+def test_special_asset_names(spark, tmp_path):
+    """Names with commas, quotes, backslashes, dots, spaces and a
+    backtick are legal assets: the SQL text quotes each one, and both
+    files carry them as Spark's CSV writer quotes them."""
+    path = _write(tmp_path, "special.csv", SPECIAL_CSV)
+    res = run_report(spark, path, "2024-01-01", "2024-01-03", os.path.join(str(tmp_path), "o"))
+    assert res["assets"] == SPECIAL_NAMES
+    assert res["daily_returns_count"] == 3
+
+    # Spark's CSV writer quotes a field holding the separator or a quote
+    # and escapes quotes with a backslash; it leaves a bare backslash.
+    daily = _lines(res["daily_returns_path"])
+    assert daily[0] == (
+        'Date,"A,B","say \\"hi\\"",it\'s,back\\slash,BRK.B,S&P500,my asset,A`B,'
+        '"A,B_Retorno","say \\"hi\\"_Retorno",it\'s_Retorno,back\\slash_Retorno,'
+        "BRK.B_Retorno,S&P500_Retorno,my asset_Retorno,A`B_Retorno"
+    )
+    assert daily[-1] == ""
+    rows = [r.split(",") for r in daily[1:-1]]
+    assert [r[0] for r in rows] == ["2024-01-01", "2024-01-02", "2024-01-03"]
+    assert rows[0][9:] == [""] * 8
+    assert [float(x) for x in rows[1][9:]] == [100.0, 50.0, -50.0, 0.0, 100.0, -50.0, 200.0, -50.0]
+    assert [float(x) for x in rows[2][9:]] == [100.0, 100.0, 50.0, -50.0, -50.0, 100.0, 100.0, 200.0]
+
+    want = [100.0, 75.0, 0.0, -25.0, 25.0, 25.0, 150.0, 75.0]
+    assert res["averages"] == {f"Media_{a}_Retorno": v for a, v in zip(SPECIAL_NAMES, want)}
+    avg = _lines(res["average_daily_return_path"])
+    assert avg[0] == (
+        '"Media_A,B_Retorno","Media_say \\"hi\\"_Retorno",Media_it\'s_Retorno,'
+        "Media_back\\slash_Retorno,Media_BRK.B_Retorno,Media_S&P500_Retorno,"
+        "Media_my asset_Retorno,Media_A`B_Retorno"
+    )
+    assert [float(x) for x in avg[1].split(",")] == want
+    assert avg[2:] == [""]
+
+
+def test_non_numeric_asset_column(spark, tmp_path):
+    """A corrupt cell types its whole column as a string; the request
+    fails and names the column instead of filling and casting around
+    it. A header-only file infers every column as a string and still
+    yields the empty report."""
+    out = os.path.join(str(tmp_path), "o")
+    bad = _write(
+        tmp_path, "bad.csv",
+        "Date,A,B,C\n2024-01-01,1,2,x\n2024-01-02,2,n/a,y\n2024-01-03,3,3,z\n",
+    )
+    with pytest.raises(ValueError, match=r"non-numeric asset columns: 'B' \(string\), 'C' \(string\)"):
+        run_report(spark, bad, "2024-01-01", "2024-01-03", out)
+
+    empty = _write(tmp_path, "header_only.csv", "Date,A,B\n")
+    res = run_report(spark, empty, "2024-01-01", "2024-12-31", out)
+    assert res["empty"] and res["daily_returns_count"] == 0 and res["averages"] == {}
+    assert _read_rows(res["daily_returns_path"]) == [["Date", "A", "B", "A_Retorno", "B_Retorno"]]
+    assert _read_rows(res["average_daily_return_path"]) == [
+        ["Media_A_Retorno", "Media_B_Retorno"], ["", ""],
+    ]
+
+
+@pytest.mark.parametrize("single_file", [True, False], ids=["single", "multipart"])
+def test_phase_timings(spark, dataset, tmp_path, single_file):
+    t = time.perf_counter()
+    res = run_report(
+        spark, dataset, "2024-01-02", "2024-01-05", os.path.join(str(tmp_path), "o"),
+        single_file=single_file,
+    )
+    wall = time.perf_counter() - t
+    timings = res["timings_s"]
+    assert list(timings) == ["read", "build", "write_daily", "summary", "write_averages"]
+    assert all(v >= 0 for v in timings.values())
+    assert sum(timings.values()) <= wall
+
+
 def test_validation_errors(spark, dataset, tmp_path):
     out = os.path.join(str(tmp_path), "o")
     with pytest.raises(ValueError, match="yyyy-MM-dd"):
@@ -148,10 +263,13 @@ def test_request_frees_its_cache(spark, dataset, tmp_path):
 
 def test_job_budget(spark, dataset, tmp_path):
     """Guard against actions creeping back into the request. Measured at
-    7 jobs on Spark 4.1: two for the inferSchema read, one for the
-    window's shuffle map stage that builds the cached ``daily``, one for
-    the daily CSV write, two for the averages write (its aggregate's map
-    stage, then the write) and one for ``first()``."""
+    6 jobs on Spark 4.1:
+
+    1-2. the inferSchema read (two jobs);
+    3. the window's shuffle map stage, which builds the cached ``daily``;
+    4. the daily CSV write;
+    5-6. ``first()`` of the one aggregate (its map stage, then the
+       result), whose row also carries the averages file's text."""
     sc = spark.sparkContext
     group = "test_runner_job_budget"
     sc.setJobGroup(group, group)
@@ -162,4 +280,48 @@ def test_job_budget(spark, dataset, tmp_path):
             sc.setLocalProperty(key, None)
     # The status tracker is fed by the listener bus; drain it first.
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 7
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+
+
+def _wide_csv(tmp_path, n_assets):
+    header = "Date," + ",".join(f"A{i}" for i in range(n_assets))
+    rows = [
+        f"2024-02-{d:02d}," + ",".join(str(1.0 + (d * i) % 7) for i in range(n_assets))
+        for d in range(1, 29)
+    ]
+    return _write(tmp_path, f"wide{n_assets}.csv", "\n".join([header, *rows]) + "\n")
+
+
+def _py4j_commands(spark, path, out):
+    """Py4J commands the driver sends for one warm request, JVM-object
+    finalizers included (they run on py4j's finalizer thread)."""
+    client = spark.sparkContext._gateway._gateway_client
+    run_report(spark, path, "2024-02-01", "2024-02-28", out)
+    gc.collect()
+    pending = getattr(client, "finalizer_deque", ())
+    deadline = time.monotonic() + 10
+    while pending and time.monotonic() < deadline:
+        time.sleep(0.05)
+    calls = []
+    send = client.send_command
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        run_report(spark, path, "2024-02-01", "2024-02-28", out)
+    finally:
+        client.send_command = send
+    return len(calls)
+
+
+def test_py4j_budget(spark, tmp_path):
+    """Per-asset expressions are SQL text, so an added asset costs the
+    driver a few Py4J commands (one list element per projection), not a
+    chain of Column objects (about 130 per asset with Column calls)."""
+    out = os.path.join(str(tmp_path), "o")
+    narrow = _py4j_commands(spark, _wide_csv(tmp_path, 2), out)
+    wide = _py4j_commands(spark, _wide_csv(tmp_path, 64), out)
+    assert (wide - narrow) / 62 < 4, (narrow, wide)
