@@ -19,9 +19,13 @@ materialized the plans they care about).
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 from pyspark.sql import DataFrame
 
-_TRACKED: list[DataFrame] = []
+#: Tracked frames, released through ``unpersist(blocking)``: persisted
+#: DataFrames themselves, and a handle per checkpointed frame.
+_TRACKED: list = []
 
 
 def track(df: DataFrame) -> DataFrame:
@@ -30,55 +34,43 @@ def track(df: DataFrame) -> DataFrame:
     return df
 
 
-class _CheckpointHandle:
-    """Release adapter for checkpointed frames: ``DataFrame.unpersist``
-    is a CacheManager no-op for a (local)checkpoint — the materialized
-    rows live as RDD blocks under a ``LogicalRDD``, so freeing them
-    means unpersisting that internal RDD. Best-effort: a reliable
-    checkpoint's files (and any already-released RDD) make this a
-    harmless no-op."""
-
-    def __init__(self, df: DataFrame) -> None:
-        self._df = df
-
-    def unpersist(self, blocking: bool = False) -> None:
-        try:
-            self._df._jdf.queryExecution().analyzed().rdd().unpersist(
-                blocking
-            )
-        except Exception:  # pragma: no cover - non-LogicalRDD plans
-            pass
-
-
 def track_checkpoint(df: DataFrame) -> DataFrame:
     """Register a checkpointed frame (``localCheckpoint``/``checkpoint``)
-    so ``release_operator_caches()`` bounds its block lifetime like any
-    persisted frame. After release the frame is UNUSABLE (the lineage
-    was truncated — there is nothing to recompute from), so the
-    release-only-after-consumers-materialized contract is load-bearing
-    here, not just a recompute cost."""
-    _TRACKED.append(_CheckpointHandle(df))  # type: ignore[arg-type]
+    so ``release_operator_caches()`` frees it like a persisted frame —
+    see that function for what release means here."""
+    _TRACKED.append(
+        SimpleNamespace(unpersist=lambda blocking: release_checkpoint(df, blocking))
+    )
     return df
 
 
 def release_checkpoint(df: DataFrame, blocking: bool = False) -> None:
-    """Immediately free a checkpointed frame's blocks (for superseded
-    per-iteration frames that are provably never read again)."""
-    _CheckpointHandle(df).unpersist(blocking)
+    """Free a checkpointed frame now: its blocks and, for a reliable
+    ``checkpoint()``, its files. ``DataFrame.unpersist`` is a
+    CacheManager no-op here — the rows live under the ``LogicalRDD``
+    the checkpoint left as the frame's plan, so that RDD is released.
+    Only for frames that are provably never read again."""
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    rdd.unpersist(blocking)
+    files = rdd.getCheckpointFile()
+    if files.isDefined():
+        path = df.sparkSession._jvm.org.apache.hadoop.fs.Path(files.get())
+        conf = df.sparkSession.sparkContext._jsc.hadoopConfiguration()
+        path.getFileSystem(conf).delete(path, True)
 
 
 def release_operator_caches(blocking: bool = False) -> int:
-    """Unpersist every tracked frame; returns how many were released.
+    """Release every tracked frame; returns how many were released.
 
-    CONTRACT: call only after every consumer of the returned plans has
-    materialized. Some tracked persists are CORRECTNESS barriers, not
-    perf caches — e.g. global_lag/global_row_number's range path
-    persists the bucketed frame so all downstream branches see ONE
-    repartitionByRange boundary sampling; after release, a
-    re-materialized plan re-runs the range exchange independently per
-    branch and the __pid/__b assignments can diverge, silently
-    corrupting positions. Releasing mid-lifetime is therefore not just
-    a recompute cost (round-3 ADVICE)."""
+    No tracked persist is a correctness barrier: a persisted frame is
+    a pure performance choice, and a plan re-run after its release
+    recomputes the same rows (the global-order operators bucket on
+    literal split points, not on cached partitions). Releasing early
+    costs recompute time only — with ONE exception: a
+    ``track_checkpoint`` frame has no lineage left to recompute from,
+    so once released it is unusable and an action on it fails (its
+    blocks and files are gone). Call this only after every consumer of
+    a checkpointed frame has materialized."""
     n = len(_TRACKED)
     while _TRACKED:
         _TRACKED.pop().unpersist(blocking)

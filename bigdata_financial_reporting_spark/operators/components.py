@@ -46,6 +46,9 @@ def _cut_lineage(df: DataFrame) -> DataFrame:
     and ``localCheckpoint()`` otherwise (executor memory+disk blocks —
     fine for local mode and tests, but NOT executor-loss tolerant: the
     lineage is gone, so a lost executor fails the job; see SCALING.md).
+    No persist precedes the reliable checkpoint: the eager checkpoint
+    evaluates the round once either way (a per-row counter reads the
+    same count with and without one), and a persist only adds a job.
     """
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
@@ -111,8 +114,9 @@ def connected_components(
             .agg(F.min("component").alias("component"))
         )
         # new_labels is materialized (checkpoints are eager): the
-        # previous round's blocks can never be read again — free them
-        # now instead of waiting for py4j GC.
+        # previous round's blocks and checkpoint files can never be
+        # read again — free them now instead of leaving one label-table
+        # copy per round behind.
         release_checkpoint(labels)
         new_sum = label_sum(new_labels)
         labels = new_labels

@@ -7,40 +7,84 @@ even logs a warning). That is the worst scaling decision in the
 reference; this operator is the fix for workloads that genuinely need a
 global order (single logical series, cross-series cumulative metrics):
 
-1. ``repartitionByRange`` on the order key: partitions hold disjoint,
-   consecutive key ranges — a parallel global sort (Spark's own
-   ``orderBy`` machinery, sampled boundaries).
-2. Per-partition window work keyed on ``spark_partition_id()`` —
-   ordinary parallel window evaluation.
-3. The cross-partition stitch (predecessors / offsets) needs one tiny
-   per-partition summary row — at most one row per partition,
-   trivially broadcastable at any scale.
+1. Bucket every row into one of P disjoint, consecutive order-key
+   intervals — a coarsening of the order, so rows sort by bucket first.
+2. Per-bucket window work keyed on the bucket — ordinary parallel
+   window evaluation behind one hash shuffle of the data.
+3. The cross-bucket stitch (predecessors / offsets) needs one tiny
+   per-bucket summary row — at most P rows, trivially broadcastable at
+   any scale; the only unpartitioned window in the plan runs over them.
 
-Total cost: one range shuffle + a broadcast of num_partitions rows —
-versus the reference's all-rows-to-one-task collapse. Result is
-IDENTICAL to the naive global window (same total order, tie-broken by
-the caller's order columns).
+Result is IDENTICAL to the naive global window (same total order,
+tie-broken by the caller's order columns).
 
-Persist-boundary discipline (optimization round 15): where the
-operator's OUTPUT is consumed more than once per action set
-(``global_row_number``'s range path — callers count the ranked frame
-and then reuse it), the persist sits ABOVE the window so repeated
-consumers read the materialized ranking instead of re-running the
-partition-id exchange + sort + window per consumer. Where the output
-has a single consumer (the running-sum family), the persist stays
-BELOW the window on the narrow range-partitioned frame — measured at
-sf0.1, re-scanning a wider materialized window output twice costs more
-than re-running the tiny per-partition window once, and the summary
-branch is a map-side partial aggregation over the narrow cache either
-way. Both placements pin correctness identically: repartitionByRange
-samples boundaries, so all consumers must see ONE materialized
-partition assignment (operators/cache.py contract).
+Split points, not cached partitions: the bucket is a pure column
+expression comparing the order key with at most P-1 LITERAL split
+points (``_split_bucket``). One small eager job collects a bounded
+random sample of the order key and the driver picks the split points
+from it, so every re-plan of every branch — after a cache release, an
+eviction or a lost executor — computes the same bucket for the same
+row. The split points only balance the buckets: any values give the
+same result, so the sample never needs to be reproducible and an
+empty bucket (ties, more buckets than distinct keys) is harmless. P
+follows the input: the estimated plan size in units of AQE's advisory
+partition size, capped at ``spark.sql.shuffle.partitions``; inputs
+under one advisory partition take one bucket and skip the sample.
+Nothing here is cached, so no cache state can change a result.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _split_bucket(
+    df: DataFrame, order_cols: list[str], num_partitions: int | None
+) -> Column:
+    """The index of the order-key interval each row falls in, between
+    at most ``num_partitions - 1`` split points sampled from ``df``."""
+    spark = df.sparkSession
+    if num_partitions is None:
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        target = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        )
+        num_partitions = min(
+            size // target + 1, int(spark.conf.get("spark.sql.shuffle.partitions"))
+        )
+    sample = []
+    if num_partitions > 1:
+        sample = (
+            df.select(*order_cols)
+            .orderBy(F.rand(0))
+            .limit(100 * num_partitions)
+            .orderBy(*order_cols)
+            .collect()
+        )
+    splits = [
+        F.struct(
+            *[F.lit(row[c]).cast(df.schema[c].dataType).alias(c) for c in order_cols]
+        )
+        for row in (
+            sample[i * len(sample) // num_partitions]
+            for i in range(1, num_partitions if sample else 0)
+        )
+    ]
+    # The struct compares field by field, ascending with nulls first —
+    # the window's own order — and is never null itself.
+    key = F.struct(*order_cols)
+
+    def search(lo: int, hi: int) -> Column:
+        # number of splits <= key, given splits[:lo] <= key < splits[hi:]
+        if lo == hi:
+            return F.lit(lo)
+        mid = (lo + hi) // 2
+        return F.when(key < splits[mid], search(lo, mid)).otherwise(
+            search(mid + 1, hi)
+        )
+
+    return search(0, len(splits))
 
 
 def global_lag(
@@ -53,47 +97,31 @@ def global_lag(
     """``df`` + ``out_col`` = lag(value_col) over the global order
     defined by ``order_cols`` (must be a total order for deterministic
     results)."""
-    from pyspark.storagelevel import StorageLevel
-
-    from bigdata_financial_reporting_spark.operators.cache import track
-
-    order = [F.col(c) for c in order_cols]
-    # Persisted for CORRECTNESS, not just speed: repartitionByRange
-    # samples the data to pick boundaries, so two independent
-    # evaluations of this subtree could assign rows to different
-    # partitions — the boundary stitch below requires every consumer to
-    # see the SAME __pid assignment. Tracked so callers' cache-release
-    # points free it like every other operator-internal persist.
-    parts = track(
-        df.repartitionByRange(*([num_partitions] if num_partitions else []), *order)
-        .withColumn("__pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    parts = df.withColumn("__b", _split_bucket(df, order_cols, num_partitions))
+    w = Window.partitionBy("__b").orderBy(*order_cols)
+    within = parts.select(
+        "*",
+        F.lag(value_col).over(w).alias(out_col),
+        F.row_number().over(w).alias("__rn"),
     )
-
-    w = Window.partitionBy("__pid").orderBy(*order)
-    within = parts.withColumn(out_col, F.lag(value_col).over(w))
-
-    # Last row of each partition = the predecessor for partition pid+1's
-    # first row. max_by over the order-key struct picks it in one agg.
-    okey = F.struct(*order)
-    lasts = (
-        parts.groupBy("__pid")
-        .agg(F.max_by(F.col(value_col), okey).alias("__prev_val"))
-        .select((F.col("__pid") + 1).alias("__pid"), "__prev_val")
+    # The last row of the nearest NON-EMPTY earlier bucket is a bucket's
+    # predecessor: lag over the per-bucket table, which holds only the
+    # buckets that have rows. max_by over the order-key struct picks
+    # each bucket's last row in one aggregation.
+    lasts = parts.groupBy("__b").agg(
+        F.max_by(F.col(value_col), F.struct(*order_cols)).alias("__last")
     )
-
-    # First row per partition: no within-partition predecessor.
-    first_w = Window.partitionBy("__pid").orderBy(*order)
-    flagged = within.withColumn("__rn", F.row_number().over(first_w))
-    patched = (
-        flagged.join(F.broadcast(lasts), "__pid", "left")
+    prev = lasts.select(
+        "__b", F.lag("__last").over(Window.orderBy("__b")).alias("__pred")
+    )
+    return (
+        within.join(F.broadcast(prev), "__b")
         .withColumn(
             out_col,
-            F.when(F.col("__rn") == 1, F.col("__prev_val")).otherwise(F.col(out_col)),
+            F.when(F.col("__rn") == 1, F.col("__pred")).otherwise(F.col(out_col)),
         )
-        .drop("__pid", "__rn", "__prev_val")
+        .drop("__b", "__rn", "__pred")
     )
-    return patched
 
 
 def global_row_number(
@@ -105,65 +133,23 @@ def global_row_number(
 ) -> DataFrame:
     """``row_number()`` over the global order defined by ``order_cols``
     (must be a total order), without the single-partition collapse:
-    rank within disjoint order-respecting groups in parallel, then add
-    per-group offsets. The offset table is one row per group — the only
-    unpartitioned window in the plan runs over those rows, never over
-    the data.
+    rank within buckets in parallel, then add per-bucket offsets. The
+    offset table is one row per bucket — the only unpartitioned window
+    in the plan runs over those rows, never over the data.
 
-    Two grouping strategies:
-
-    - ``bucket_col`` given: it must be a COARSENING of the order —
-      rows sort by bucket first, e.g. a fixed-width prefix of the
-      first order column (hash keys qualify; arbitrary keys usually
-      don't). Then ONE hash shuffle of the data on the static bucket
-      suffices, with no boundary sampling and no persist: bucket
-      assignment is a pure function of the row, so every consumer
-      recomputes it identically. The count branch stays a direct
-      map-side-combined aggregation over the un-windowed input (a
-      second scan of the source, but no sort/exchange of the data —
-      cheaper than re-running the window pipeline, which an
-      unpersisted fused branch would pay).
-    - otherwise: ``repartitionByRange`` on the order key (works for
-      any key distribution). The per-partition counts are fused into
-      the ranking Window exec (an unbounded-frame count over the same
-      (partition, order) spec shares the one physical Window operator)
-      and the persist sits ABOVE the window: callers of this path
-      consume the ranked output repeatedly (count + reuse), so every
-      consumer after the first reads the materialized ranking instead
-      of re-running the partition-id exchange + sort + window. The
-      persist also pins the sampled range boundaries across consumers
-      (callers own the cache lifetime, as with the shingle frames in
-      operators/dedup).
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    from bigdata_financial_reporting_spark.operators.cache import track
-
-    order = [F.col(c) for c in order_cols]
-    if bucket_col is not None:
-        parts = df.withColumn("__b", bucket_col)
-        w = Window.partitionBy("__b").orderBy(*order)
-        within = parts.withColumn("__rn", F.row_number().over(w))
-        counts = parts.groupBy("__b").agg(F.count(F.lit(1)).alias("__cnt"))
-    else:
-        w = Window.partitionBy("__b").orderBy(*order)
-        w_all = w.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        within = track(
-            df.repartitionByRange(
-                *([num_partitions] if num_partitions else []), *order
-            )
-            .withColumn("__b", F.spark_partition_id())
-            .select(
-                "*",
-                F.row_number().over(w).alias("__rn"),
-                F.count(F.lit(1)).over(w_all).alias("__cnt"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        counts = within.groupBy("__b").agg(F.first("__cnt").alias("__cnt"))
-        within = within.drop("__cnt")
+    The bucket is ``bucket_col`` when given — it must be a COARSENING
+    of the order (rows sort by bucket first), e.g. a fixed-width prefix
+    of the first order column (hash keys qualify; arbitrary keys
+    usually don't), which needs no sample — and the split-point bucket
+    otherwise. The count branch is a map-side-combined aggregation
+    over the un-windowed input."""
+    if bucket_col is None:
+        bucket_col = _split_bucket(df, order_cols, num_partitions)
+    parts = df.withColumn("__b", bucket_col)
+    within = parts.withColumn(
+        "__rn", F.row_number().over(Window.partitionBy("__b").orderBy(*order_cols))
+    )
+    counts = parts.groupBy("__b").agg(F.count(F.lit(1)).alias("__cnt"))
     wo = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.select(
         "__b", F.coalesce(F.sum("__cnt").over(wo), F.lit(0)).alias("__off")
@@ -200,40 +186,24 @@ def global_running_sum(
 ) -> DataFrame:
     """Running sums of ``value_cols`` over the TOTAL order defined by
     ``order_cols`` (must be a total order), without the
-    single-partition collapse: range-partition on the order key, local
-    running sums per partition, then add per-partition prefix offsets
-    — the offset table is one row per PARTITION, so the only
-    unpartitioned window runs over ~#partitions rows, never the data.
-    Output columns are ``run_<value_col>``; with ``with_totals=True``
-    every row additionally carries ``tot_<value_col>`` = the GRAND
-    total of that column, computed as one extra unbounded-frame sum
-    over the same per-partition totals in the SAME tiny offsets window
-    — so callers needing both the running values and the totals (ECDF
-    normalization, say) consume ONE frame instead of aggregating the
-    output a second time, which re-ran the whole window pipeline per
-    extra consumer before round 15. The grand totals are exact-equal
-    to a separate aggregation for the integer / decimal /
+    single-partition collapse: local running sums per bucket, then add
+    per-bucket prefix offsets — the offset table is one row per
+    bucket, so the only unpartitioned window runs over at most P rows,
+    never the data. Output columns are ``run_<value_col>``; with
+    ``with_totals=True`` every row additionally carries
+    ``tot_<value_col>`` = the GRAND total of that column, computed as
+    one extra unbounded-frame sum over the same per-bucket totals in
+    the SAME tiny offsets window — so callers needing both the running
+    values and the totals (ECDF normalization, say) consume ONE frame
+    instead of aggregating the output a second time, which re-ran the
+    whole window pipeline per extra consumer. The grand totals are
+    exact-equal to a separate aggregation for the integer / decimal /
     integer-valued-double columns callers feed (float association
-    never changes a sum of exactly representable integers). Same
-    persist-for-correctness contract as global_lag:
-    repartitionByRange samples boundaries, so the partition assignment
-    is pinned by the tracked persist (callers own the cache
-    lifetime)."""
-    from pyspark.storagelevel import StorageLevel
-
-    from bigdata_financial_reporting_spark.operators.cache import track
-
-    order = [F.col(c) for c in order_cols]
-    parts = track(
-        df.repartitionByRange(
-            *([num_partitions] if num_partitions else []), *order
-        )
-        .withColumn("__b", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    never changes a sum of exactly representable integers)."""
+    parts = df.withColumn("__b", _split_bucket(df, order_cols, num_partitions))
     w_in = (
         Window.partitionBy("__b")
-        .orderBy(*order)
+        .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     local = parts.select(
@@ -254,18 +224,14 @@ def global_running_sum(
             )
             for v in value_cols
         ],
-        *(
-            [
-                F.sum(f"__tot_{v}").over(wall).alias(f"tot_{v}")
-                for v in value_cols
-            ]
-            if with_totals
-            else []
-        ),
+        *[
+            F.sum(f"__tot_{v}").over(wall).alias(f"tot_{v}")
+            for v in (value_cols if with_totals else [])
+        ],
     )
     out = local.join(F.broadcast(offsets), "__b")
     for v in value_cols:
         out = out.withColumn(
             f"run_{v}", F.col(f"__local_{v}") + F.col(f"__off_{v}")
-        ).drop(f"__local_{v}", f"__off_{v}", f"__tot_{v}")
+        ).drop(f"__local_{v}", f"__off_{v}")
     return out.drop("__b")

@@ -1882,9 +1882,9 @@ def agg_ks_twosample(spark, sf_dir):
     observed value. The classic distribution-drift detector for data
     pipelines. Scalable shape: counts per DISTINCT value first
     (map-side combined), then the running ECDFs via
-    ``global_running_sum`` — a range-partitioned two-phase cumulative
-    sum whose only unpartitioned window runs over the per-partition
-    offset table, never the data (operators/global_window.py). The
+    ``global_running_sum`` — a split-point-bucketed two-phase
+    cumulative sum whose only unpartitioned window runs over the
+    per-bucket offset table, never the data (operators/global_window.py). The
     oracle's single-partition `ORDER BY` window computes the same
     prefix sums."""
     from bigdata_financial_reporting_spark.operators.global_window import (
@@ -2665,9 +2665,9 @@ def stat_mann_whitney_u(spark, sf_dir):
     avg_rank*2 = 2C + t + 1, so R1*2 = Σ c1·(2·run_t − t + 1) needs
     only the per-DISTINCT-VALUE count table plus a running sum. That
     running sum goes through ``global_running_sum`` — the same
-    range-partitioned two-phase cumulative sum agg_ks_twosample uses —
-    so there is NO row-level global sort: the only unpartitioned
-    window runs over the per-partition offset table. U is emitted as
+    split-point-bucketed two-phase cumulative sum agg_ks_twosample
+    uses — so there is NO row-level global sort: the only unpartitioned
+    window runs over the per-bucket offset table. U is emitted as
     u1_x2 = 2·U (exact integer); the tie-corrected z is one fixed
     double expression over exact integers, mirrored in the oracle."""
     from bigdata_financial_reporting_spark.operators.global_window import (
@@ -2875,7 +2875,7 @@ def stat_kruskal_wallis(spark, sf_dir):
     (distribution-free) ANOVA, with the tie correction. No row-level
     global sort: average ranks come from DISTINCT-VALUE cells (the
     stat_mann_whitney_u plan) — midrank2 = 2*run_t - t + 1 is an exact
-    integer per cell, run_t from the range-partitioned
+    integer per cell, run_t from the split-point-bucketed
     ``global_running_sum``. Every moment (n_g, rank sums, tie³) is an
     exact decimal(38,0) integer; the five per-group double terms
     R²/(4n) fold in FIXED group order on both engines (the
@@ -3236,7 +3236,7 @@ def stat_runs_test(spark, sf_dir):
     (ts, event_id). R, n1, n2 are exact integers; z's 6dp rounding
     sits behind a sqrt (irrational — never on a decimal half). The
     per-type window is a bounded partition here; at corpus scale the
-    flag + sum pair range-partitions like global_running_sum."""
+    flag + sum pair buckets on split points like global_running_sum."""
     ev = load_table(spark, sf_dir, "events")
     q = ev.select(
         "event_type",
@@ -3826,10 +3826,12 @@ def agg_tdigest_quantiles(spark, sf_dir):
     fails the hash).
 
     Scale: the global rank is operators/global_window.global_row_number
-    — ONE range shuffle + a broadcast of per-partition offsets, never
-    the single-task global window. The loud N-guard keeps t exact
-    (2r-N must stay below 2^53; beyond ~4.5e15 rows, pre-aggregate to
-    distinct-value cells first)."""
+    — ONE shuffle of the data into split-point buckets + a broadcast of
+    per-bucket offsets, never the single-task global window. N is the
+    input's row count (the sum of the per-bucket counts), a column-free
+    count of the scan rather than a second run of the ranking. The loud
+    N-guard keeps t exact (2r-N must stay below 2^53; beyond ~4.5e15
+    rows, pre-aggregate to distinct-value cells first)."""
     from bigdata_financial_reporting_spark.operators.global_window import (
         global_row_number,
     )
@@ -3844,7 +3846,7 @@ def agg_tdigest_quantiles(spark, sf_dir):
     ranked = global_row_number(
         li, ["vc", "l_orderkey", "l_linenumber"], out_col="r"
     )
-    n_total = ranked.count()
+    n_total = li.count()
     if not 0 < n_total < 4.5e15:
         raise ValueError(
             "agg_tdigest_quantiles: row count outside the exact-double "
@@ -3928,7 +3930,7 @@ def stat_wilcoxon_signed_rank(spark, sf_dir):
     ties via the doubled-rank identity avg_rank*2 = 2C + t + 1 over
     the per-DISTINCT-|d| count table, so W+*2 = SUM cpos*(2*run_t - t
     + 1) is an exact integer. The running sum goes through
-    ``global_running_sum`` (range-partitioned two-phase, no row-level
+    ``global_running_sum`` (split-point buckets, two-phase, no row-level
     global sort — the stat_mann_whitney_u / agg_ks_twosample posture);
     the cell table is AT MOST ~19 rows here (cents differences in
     [-10, 8]) and bounded by the |d| domain generally, so the offset

@@ -803,7 +803,7 @@ def ops_compaction_bins(spark, sf_dir):
     the plan a compaction job executes with one write per bin. The
     classic contiguous bin-packing identity: a partition's bin is
     floor(rows_before_it / target), from one running sum over the
-    (tiny) per-partition stats — computed with the range-partitioned
+    (tiny) per-partition stats — computed with the split-point-bucketed
     ``global_running_sum``, so even a million-partition table plans
     without a single-task sort. Pure integer arithmetic."""
     from bigdata_financial_reporting_spark.operators.global_window import (

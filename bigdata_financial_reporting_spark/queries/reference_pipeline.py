@@ -96,8 +96,8 @@ def ref_avg_daily_return(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ref_daily_returns_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME global-order result as ref_daily_returns, computed
-    scalably: range-partitioned parallel lag + a broadcast boundary
-    stitch instead of the reference's all-rows-to-one-task window
+    scalably: parallel lag within split-point buckets + a broadcast
+    boundary stitch instead of the reference's all-rows-to-one-task window
     (operators/global_window.py). Identical oracle to ref_daily_returns
     — the rewrite must be invisible in the values."""
     from bigdata_financial_reporting_spark.operators.global_window import (

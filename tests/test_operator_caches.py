@@ -84,3 +84,39 @@ def test_derived_banding_never_invents_and_keeps_high_recall(spark, sf_dir):
     recall = len(banded) / len(exact)
     assert recall >= 0.95, f"recall {recall} below floor; missed {set(exact)-set(banded)}"
     release_operator_caches()
+
+
+def test_reliable_checkpoint_components_keep_only_final_files(spark, tmp_path):
+    """With a checkpoint dir set, connected components checkpoints each
+    round reliably: the labels equal the localCheckpoint path's, only
+    the final round's checkpoint files are left behind, and release
+    deletes those too — after which the frame is unusable, the one
+    data-losing case of release_operator_caches()."""
+    import pytest
+
+    from bigdata_financial_reporting_spark.operators.components import (
+        connected_components,
+    )
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 40, 2)]
+        + [(2 * i, 2 * i + 2) for i in range(10)],
+        ["id_a", "id_b"],
+    )
+    release_operator_caches()
+    want = sorted(map(tuple, connected_components(edges).collect()))
+    release_operator_caches()
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(tmp_path))
+    try:
+        out = connected_components(edges)
+        assert sorted(map(tuple, out.collect())) == want
+        assert len([p for p in tmp_path.rglob("rdd-*") if p.is_dir()]) == 1
+        release_operator_caches()
+        assert not list(tmp_path.rglob("rdd-*"))
+        with pytest.raises(Exception):
+            out.collect()
+    finally:
+        # the checkpoint dir is context-wide: unset it for later tests
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None

@@ -61,7 +61,15 @@ _QUANTIZER_KEYS = {
     "sim_ivfpq_residual_encode", "sim_ivfpq_topk", "sim_ivfpq_trained_topk",
     "dedup_semantic_semdedup",
 }
-_ORACLE_SMOKE = _smoke_subset(ORACLE_SPECS) | _QUANTIZER_KEYS
+#: Also in the default tier: every key built on the global-order
+#: operators of operators/global_window.py (split-point buckets and a
+#: per-bucket stitch), whose results must not depend on the layout.
+_GLOBAL_ORDER_KEYS = {
+    "agg_ks_twosample", "stat_mann_whitney_u", "stat_kruskal_wallis",
+    "agg_tdigest_quantiles", "stat_wilcoxon_signed_rank",
+    "ops_compaction_bins", "text_global_shuffle", "ref_daily_returns_scalable",
+}
+_ORACLE_SMOKE = _smoke_subset(ORACLE_SPECS) | _QUANTIZER_KEYS | _GLOBAL_ORDER_KEYS
 _ROWS_SMOKE = _smoke_subset(ROWS_ONLY_SPECS)
 
 

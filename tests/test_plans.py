@@ -79,12 +79,27 @@ def test_global_window_is_flagged_single_partition(spark, sf_dir):
     assert "SinglePartition" in physical_plan(df)
 
 
-def test_scalable_global_lag_avoids_single_partition(spark, sf_dir):
-    """The scalable rewrite of the global window must not contain the
-    1-task collapse it exists to avoid."""
-    df = QUERIES["ref_daily_returns_scalable"].fn(spark, sf_dir)
-    assert "SinglePartition" not in physical_plan(df)
-    assert "rangepartitioning" in physical_plan(df)
+def test_scalable_global_lag_keeps_data_off_single_partition(spark, sf_dir):
+    """The scalable rewrite of the global window must not move the data
+    through the 1-task collapse it exists to avoid. The bucket count
+    follows the input size in advisory-partition units, and the
+    fixture's events fit one, so the advisory size is lowered to get
+    the multi-bucket plan a large input gets: one hash shuffle of the
+    data on the split-point bucket, no sampled range exchange, and the
+    only SinglePartition exchange sits over the per-bucket table."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    try:
+        p = physical_plan(QUERIES["ref_daily_returns_scalable"].fn(spark, sf_dir))
+    finally:
+        spark.conf.set(key, old)
+    assert "rangepartitioning" not in p
+    assert "Exchange hashpartitioning(__b" in p
+    lines = p.splitlines()
+    single = [i for i, line in enumerate(lines) if "SinglePartition" in line]
+    assert len(single) == 1
+    assert "Aggregate(key=[__b" in lines[single[0] + 1]
 
 
 @pytest.fixture(scope="module")

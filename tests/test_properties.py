@@ -647,6 +647,109 @@ def test_global_running_sum_matches_single_partition_window(spark):
     release_operator_caches()
 
 
+def _naive_global(df, order_cols):
+    """The single-partition reference for the global-order operators:
+    lag, row_number and running sum of ``v`` over ``order_cols``."""
+    w = Window.orderBy(*order_cols)
+    return {
+        r["idx"]: (r["l"], r["p"], r["s"])
+        for r in df.select(
+            "idx",
+            F.lag("v").over(w).alias("l"),
+            F.row_number().over(w).cast("long").alias("p"),
+            F.sum("v")
+            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+            .alias("s"),
+        ).collect()
+    }
+
+
+def _global_ops(df, order_cols, num_partitions):
+    """Each global-order operator over ``df``, as (name, index into a
+    ``_naive_global`` tuple, output column, builder)."""
+    from bigdata_financial_reporting_spark.operators.global_window import (
+        global_lag,
+        global_row_number,
+        global_running_sum,
+    )
+
+    return [
+        ("global_lag", 0, "__lag",
+         lambda: global_lag(df, order_cols, "v", num_partitions=num_partitions)),
+        ("global_row_number", 1, "pos",
+         lambda: global_row_number(df, order_cols, num_partitions=num_partitions)),
+        ("global_running_sum", 2, "run_v",
+         lambda: global_running_sum(df, order_cols, ["v"], num_partitions)),
+    ]
+
+
+def test_global_order_survives_cache_release(spark):
+    """Fault injection: a global-order operator's result may not depend
+    on cache residency. Every operator's frame is built, then every
+    operator cache and the catalog cache are dropped after the build
+    and again between two actions; both actions must equal the naive
+    single-partition window. Covers global_row_number's split-point
+    path AND its caller-supplied bucket path."""
+    from bigdata_financial_reporting_spark.operators.cache import (
+        release_operator_caches,
+    )
+    from bigdata_financial_reporting_spark.operators.global_window import (
+        global_row_number,
+    )
+
+    n = 60_000
+    df = spark.range(0, n, numPartitions=8).select(
+        ((F.col("id") * 7919) % n).alias("idx"),
+        ((F.col("id") * 31) % 201 - 100).alias("v"),
+    )
+    naive = _naive_global(df, ["idx"])
+    ops = _global_ops(df, ["idx"], 7) + [
+        ("global_row_number[bucket_col]", 1, "pos",
+         lambda: global_row_number(
+             df, ["idx"], bucket_col=F.floor(F.col("idx") / 5000)
+         )),
+    ]
+    for name, i, out, build in ops:
+        frame = build()
+        for action in range(2):
+            release_operator_caches()
+            spark.catalog.clearCache()
+            # every column: a narrower projection prunes each branch the
+            # same way, and Spark then happens to reuse one exchange
+            got = {r["idx"]: r[out] for r in frame.collect()}
+            want = {k: v[i] for k, v in naive.items()}
+            bad = sum(got.get(k) != v for k, v in want.items())
+            assert len(got) == n and bad == 0, f"{name} action {action}: {bad} rows"
+
+
+@SETTINGS
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.one_of(st.none(), st.integers(min_value=0, max_value=1)),
+            st.integers(min_value=-100, max_value=100),
+        ),
+        min_size=1,
+        max_size=30,
+    ),
+    nparts=st.sampled_from([7, 40]),
+)
+def test_global_order_with_empty_buckets_matches_naive_window(spark, rows, nparts):
+    """Heavy ties (and NULLs, which sort first) in the first order
+    column, and more buckets than distinct keys: split points repeat,
+    so buckets come out empty. global_lag's predecessor must come from
+    the nearest NON-empty earlier bucket, and the row-number and
+    running-sum offsets must skip the empty ones."""
+    df = spark.createDataFrame(
+        [Row(k=k, v=v, idx=i) for i, (k, v) in enumerate(rows)],
+        "k int, v int, idx int",
+    )
+    naive = _naive_global(df, ["k", "idx"])
+    for name, i, out, build in _global_ops(df, ["k", "idx"], nparts):
+        got = {r["idx"]: r[out] for r in build().collect()}
+        assert got == {k: v[i] for k, v in naive.items()}, f"{name} P={nparts}"
+
+
 @SETTINGS
 @given(
     vals=st.lists(

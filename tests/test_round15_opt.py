@@ -7,11 +7,11 @@ The second optimization round's invariants:
    agg_ks_twosample consumes the running-sum frame ONCE (before: the
    n1/n2 aggregation re-ran the whole range+window pipeline as a
    second consumer, 10 executed exchanges; now 6-7).
-2. ``global_row_number``'s range path persists the RANKED output (the
-   per-partition counts are fused into the ranking Window exec), so
-   repeat consumers — agg_tdigest_quantiles counts the frame and then
-   reuses it — read the materialized ranking instead of re-running the
-   partition-id exchange + sort + window.
+2. The global-order operators leave no persisted frame in their plans
+   (round 15 persisted ``global_row_number``'s ranked output; the
+   split-point buckets that replaced it need no persist to stay
+   consistent, and agg_tdigest_quantiles counts its input instead of
+   the ranked frame).
 3. ``plans.inspect._executed_exchange_count`` deduplicates cached
    builds NESTED inside other cached builds' printed bodies, and
    normalizes trailing blank lines so identical builds printed at
@@ -29,6 +29,8 @@ from bigdata_financial_reporting_spark.operators.cache import (
     release_operator_caches,
 )
 from bigdata_financial_reporting_spark.operators.global_window import (
+    global_lag,
+    global_row_number,
     global_running_sum,
 )
 from bigdata_financial_reporting_spark.plans.inspect import (
@@ -70,27 +72,24 @@ def test_ks_twosample_single_running_sum_consumer(spark, sf_dir):
     release_operator_caches()
 
 
-def test_tdigest_persists_ranked_output(spark, sf_dir):
-    """global_row_number's range path persists the ranked frame: the
-    cached relation must CONTAIN the Window (rank computed once at
-    materialization, not once per consumer)."""
+def test_global_order_operators_leave_no_cached_relation(spark, sf_dir):
+    """The global-order operators bucket rows on literal split points,
+    so no persisted frame pins their result: neither an operator's own
+    plan nor agg_tdigest_quantiles' (which counts its input instead of
+    re-running the ranking) carries an InMemoryRelation."""
+    release_operator_caches()
+    spark.catalog.clearCache()
+    df = spark.range(0, 1000).select(
+        (F.col("id") % 97).alias("k"), F.col("id").alias("v")
+    )
+    for out in (
+        global_lag(df, ["k", "v"], "v", num_partitions=3),
+        global_row_number(df, ["k", "v"], num_partitions=3),
+        global_running_sum(df, ["k", "v"], ["v"], num_partitions=3),
+    ):
+        assert "InMemoryRelation" not in physical_plan(out)
     df = QUERIES["agg_tdigest_quantiles"].fn(spark, sf_dir)
-    plan = physical_plan(df)
-    lines = plan.splitlines()
-    in_cache_window = False
-    depth = None
-    for line in lines:
-        d = 0
-        while d < len(line) and line[d] in " :+-*()0123456789":
-            d += 1
-        if depth is not None and line.strip() and d <= depth:
-            depth = None
-        if "InMemoryRelation" in line and depth is None:
-            depth = d
-            continue
-        if depth is not None and "Window" in line:
-            in_cache_window = True
-    assert in_cache_window, "ranked Window not inside the cached build"
+    assert "InMemoryRelation" not in physical_plan(df)
     assert count_exchanges(df) <= 7
     release_operator_caches()
 
