@@ -15,6 +15,17 @@ that run many different queries in one session call
 materialized the plans they care about).
 ``perfbench/workloads.registry_op`` does this after each operation, and
 ``scripts/check_keys.py`` between keys.
+
+Keep rule: a persist stays only where it measurably pays. Time the key
+with and without it in back-to-back pairs in one process, on the
+``noop`` sink, releasing these caches and calling
+``spark.catalog.clearCache()`` after every run so each run pays its own
+cache build. Keep the persist when the median paired difference
+(without minus with) is above zero at sf0.01 or at the 10x corpus;
+delete it otherwise. A count of scan nodes in a plan that has not run
+is no evidence: AQE reuses an identical exchange within one action,
+and the cache build is an extra job that writes every block. ROADMAP
+Open item 3 holds the per-site numbers.
 """
 
 from __future__ import annotations

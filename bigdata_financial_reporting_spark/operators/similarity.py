@@ -11,19 +11,26 @@
   recall (verified against brute force in tests), deterministic given
   the seed: hyperplanes derive from xxhash64, not an RNG.
 
-CACHE CONTRACT (round-14 ADVICE note): since the round-14 scan-dedup
-work, several operators here — ``lsh_bucket_topk`` (n_tables > 1),
-``lsh_blocked_pairs``, the IVF/PQ family — persist corpus-sized
-narrow projections (id + vector [+ norm]) unconditionally per call,
-registered via ``operators.cache.track``. Spark keys cached data by
-canonicalized plan, so re-running the same query shares one entry,
-but DISTINCT inputs or parameters in one session accumulate entries
-until released: any long-lived caller must follow the repo-wide
+CACHE CONTRACT: these operators persist frames per call, registered
+via ``operators.cache.track``:
+
+- ``lsh_bucket_topk`` (n_tables > 1) and ``lsh_blocked_pairs``: the
+  narrow id + vector projections and the band-bucket frames;
+- ``ivf_probe_sweep``, ``ivf_residual_encode``, ``pq_encode`` and
+  ``ivfpq_topk``: model-sized centroid and codebook frames, and the
+  narrow corpus or query frames that several consumers read;
+- ``semantic_dedup``: the degenerate centroids and the cell assignment.
+
+``_lloyd`` persists its training units for the loop only and frees
+them itself. ``ivf_topk`` persists nothing: its degenerate centroids
+measured faster recomputed per consumer than cached (the keep rule in
+``operators.cache``). Spark keys cached data by canonicalized plan,
+so re-running the same query shares one entry, but DISTINCT inputs
+or parameters in one session accumulate entries until released: any
+long-lived caller must follow the repo-wide
 ``release_operator_caches()`` contract (call after the returned
-plans' consumers have materialized —
-``perfbench/workloads.registry_op`` and the correctness harnesses do).
-Before round 14 only signature/bucket frames were persisted; these
-operators are no longer stateless in that sense.
+plans' consumers have materialized — ``perfbench/workloads.registry_op``
+and the correctness harnesses do).
 """
 
 from __future__ import annotations
@@ -674,14 +681,7 @@ def ivf_topk(
     if centroids is not None:
         cents = centroids
     else:
-        # model-sized; persisted so the TakeOrdered pass over the
-        # corpus runs once, not once per consumer (assignment + probe
-        # sides — round-14 scan audit)
-        cents = track(
-            _degenerate_centroids(
-                corpus, corpus_id, vec_col, n_centroids
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-        )
+        cents = _degenerate_centroids(corpus, corpus_id, vec_col, n_centroids)
 
     c = corpus.select(
         F.col(corpus_id).alias("neighbor_id"),

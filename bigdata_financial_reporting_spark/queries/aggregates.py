@@ -4047,23 +4047,15 @@ def stat_friedman(spark, sf_dir):
     Q = (k-1)(4*sum Rj^2 - n^2 k(k+1)^2) / (4*sum r^2 - n k(k+1)^2)
     (stated here in doubled-rank form, so every term is integer) is
     ONE mirrored double expression over two-limb dec2d renders."""
-    from pyspark.storagelevel import StorageLevel
-
-    from bigdata_financial_reporting_spark.operators.cache import track
-
     ev = load_table(spark, sf_dir, "events")
     micro = F.round(F.col("value") * 1000000.0).cast("long")
     dec = "decimal(38,0)"
-    # Persisted (block-count-sized, never corpus-sized): the cell
-    # frame feeds both the ranking pipeline and — new in round 14 —
-    # the global treatment count, which previously re-scanned the raw
-    # table. groupBy(user_id, event_type) preserves the distinct
-    # event_type set exactly, so countDistinct over cells equals
-    # countDistinct over raw rows; one raw scan instead of two.
-    cell = track(
-        ev.groupBy("user_id", "event_type")
-        .agg(F.sum(micro.cast(dec)).alias("v"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # The cell frame feeds both the ranking pipeline and the global
+    # treatment count: groupBy(user_id, event_type) preserves the
+    # distinct event_type set exactly, so countDistinct over cells
+    # equals countDistinct over raw rows.
+    cell = ev.groupBy("user_id", "event_type").agg(
+        F.sum(micro.cast(dec)).alias("v")
     )
     kk = cell.agg(F.countDistinct("event_type").alias("k"))
     w_blk = Window.partitionBy("user_id")

@@ -2518,21 +2518,17 @@ def mix_domain_rebalance(spark, sf_dir):
     from bigdata_financial_reporting_spark.operators.cache import track
 
     d = load_table(spark, sf_dir, "documents")
-    # sized feeds the quota scalar, the per-source quota join, and the
-    # report row; tot feeds two joins — unpersisted, five raw scans per
-    # action (round-14 audit). Both are domain-count-sized; persisting
-    # them leaves two raw scans (the count pass + the ranking pass).
+    # sized feeds the quota scalar, the per-source quota join and the
+    # report row. Domain-count-sized; persisted, it runs faster than
+    # re-aggregating the corpus per consumer. The 1-row tot derives
+    # from it and is cheaper recomputed than cached.
     sized = track(
         d.groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_before"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    tot = track(
-        sized.agg(
-            (F.sum("n_before") / F.count(F.lit(1)))
-            .cast("long")
-            .alias("per_domain")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+    tot = sized.agg(
+        (F.sum("n_before") / F.count(F.lit(1))).cast("long").alias("per_domain")
     )
     w = Window.partitionBy("source").orderBy(
         F.md5(F.concat(F.lit("rebal:"), F.col("doc_id").cast("string"))),

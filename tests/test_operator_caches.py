@@ -5,6 +5,7 @@ fixture-scale exactness while tightening at production thresholds."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdata_financial_reporting_spark.operators.cache import (
@@ -17,6 +18,8 @@ from bigdata_financial_reporting_spark.operators.similarity import (
     pairwise_above_threshold,
     planes_for_threshold,
 )
+from bigdata_financial_reporting_spark.plans.inspect import physical_plan
+from bigdata_financial_reporting_spark.queries import QUERIES
 from bigdata_financial_reporting_spark.sources.catalog import load_table
 
 
@@ -47,6 +50,17 @@ def test_lsh_blocked_registers_and_survives_release(spark, sf_dir):
     n1 = df.count()
     release_operator_caches()
     assert df.count() == n1
+
+
+@pytest.mark.parametrize("key", ["stat_friedman", "sim_ivf_topk"])
+def test_keys_without_paying_persists_build_no_cache(spark, sf_dir, key):
+    """Keys whose every persist measured slower than recomputing (the
+    keep rule in operators.cache): building the plan registers no
+    operator cache and the plan reads no cached relation."""
+    release_operator_caches()
+    df = QUERIES[key].fn(spark, sf_dir)
+    assert not _TRACKED
+    assert "InMemoryRelation" not in physical_plan(df)
 
 
 def test_planes_for_threshold_monotone_and_calibrated():
@@ -92,8 +106,6 @@ def test_reliable_checkpoint_components_keep_only_final_files(spark, tmp_path):
     the final round's checkpoint files are left behind, and release
     deletes those too — after which the frame is unusable, the one
     data-losing case of release_operator_caches()."""
-    import pytest
-
     from bigdata_financial_reporting_spark.operators.components import (
         connected_components,
     )

@@ -21,6 +21,7 @@ import pytest
 
 from bigdata_financial_reporting_spark.plans.inspect import (
     _executed_exchange_count,
+    _node_depth,
     physical_plan,
     plan_report,
 )
@@ -29,20 +30,13 @@ from bigdata_financial_reporting_spark.queries import QUERIES
 SCAN_RE = re.compile(r"FileScan parquet \[[^\]]*\][^\n]*?(\w+)\.parquet")
 
 
-def _depth(line: str) -> int:
-    i = 0
-    while i < len(line) and line[i] in " :+-*(0123456789)":
-        i += 1
-    return i
-
-
 def _live_scan_count(plan: str) -> int:
-    """FileScan nodes outside InMemoryRelation subtrees (the audit's
-    executed-scan metric, mirrored here so the pin is self-contained)."""
+    """FileScan nodes outside InMemoryRelation subtrees: the scans a
+    plan runs beyond its cached builds."""
     n = 0
     cached_depth = None
     for line in plan.splitlines():
-        d = _depth(line)
+        d = _node_depth(line)
         if cached_depth is not None and d <= cached_depth and line.strip():
             cached_depth = None
         if "InMemoryRelation" in line and cached_depth is None:
