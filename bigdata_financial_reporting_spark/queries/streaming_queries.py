@@ -582,9 +582,13 @@ def stream_cdc_upsert_sink(spark, sf_dir):
     # wall PER VERSION on job scheduling + _temporary renames). The
     # partition column is a duplicate (__v) because partitionBy drops
     # its column from the data files and the stream schema needs
-    # `version` in-file.
-    log_dir = tempfile.mkdtemp(prefix="bdfr_cdc_log_")
-    stage = tempfile.mkdtemp(prefix="bdfr_cdc_stage_")
+    # `version` in-file. The stage, the log and the snapshots share one
+    # work dir; each is removed as soon as nothing reads it, so the
+    # work dir ends up holding only the final snapshot.
+    work = tempfile.mkdtemp(prefix="bdfr_cdc_")
+    log_dir = os.path.join(work, "log")
+    stage = os.path.join(work, "stage")
+    os.makedirs(log_dir)
     versions = cdc_change_log(spark, sf_dir)
     log = versions[0][1].withColumn("__v", F.col("version"))
     for _, df in versions[1:]:
@@ -603,6 +607,7 @@ def stream_cdc_upsert_sink(spark, sf_dir):
         # the per-version staged file is the micro-batch unit, so an
         # empty version would silently change the drain's batch count)
         if not os.path.isdir(vdir):
+            shutil.rmtree(work, ignore_errors=True)
             raise ValueError(
                 f"cdc staging: change-log version {version} produced "
                 "no rows — every version must stage one non-empty "
@@ -615,8 +620,8 @@ def stream_cdc_upsert_sink(spark, sf_dir):
             os.path.join(vdir, part),
             os.path.join(log_dir, f"commit-{version:05d}.parquet"),
         )
+    shutil.rmtree(stage, ignore_errors=True)
 
-    snap_root = tempfile.mkdtemp(prefix="bdfr_cdc_snap_")
     state = {"path": None}
     rn = F.row_number().over(
         Window.partitionBy("k").orderBy(F.desc("version"), "op")
@@ -628,7 +633,7 @@ def stream_cdc_upsert_sink(spark, sf_dir):
             cur = batch_df.sparkSession.read.parquet(state["path"]).unionByName(
                 batch_df
             )
-        out = os.path.join(snap_root, f"snap-{batch_id}")
+        out = os.path.join(work, f"snap-{batch_id}")
         (
             cur.withColumn("rn", rn)
             .filter(F.col("rn") == 1)
@@ -636,6 +641,8 @@ def stream_cdc_upsert_sink(spark, sf_dir):
             .write.mode("overwrite")
             .parquet(out)
         )
+        if state["path"] is not None:
+            shutil.rmtree(state["path"], ignore_errors=True)
         state["path"] = out
 
     stream = (
@@ -658,6 +665,7 @@ def stream_cdc_upsert_sink(spark, sf_dir):
         )
         q.awaitTermination()
         discard_checkpoint(ckpt)
+    shutil.rmtree(log_dir, ignore_errors=True)
     snap = spark.read.parquet(state["path"])
     return snap.filter(F.col("op") != "D").select(
         F.col("k").alias("custkey"),

@@ -5,13 +5,9 @@ commits — both docs were missing the three r12 registry keys because
 their regeneration step sat BEHIND the long 10x sweep in
 final_gate.sh and the sweep failed. The gate now regenerates the docs
 first AND runs this check, which fails loudly when either doc
-disagrees with the live registry:
-
-- QUERIES.md must declare exactly ``len(QUERIES)`` queries and carry
-  one row per registry key;
-- PLANS.md must carry a posture row for every bench HEADLINE key
-  (the add-only headline policy means every new registry extension
-  that is benched gets its plan posture committed the same round).
+disagrees with the live registry. One rule for both docs: every
+registry key has a row, and QUERIES.md declares exactly
+``len(QUERIES)`` queries.
 """
 
 import os
@@ -21,15 +17,13 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from bench import HEADLINE  # noqa: E402
 from bigdata_financial_reporting_spark.queries import QUERIES  # noqa: E402
 
 
 def main() -> int:
     ok = True
 
-    qpath = os.path.join(REPO, "QUERIES.md")
-    qtext = open(qpath).read()
+    qtext = open(os.path.join(REPO, "QUERIES.md")).read()
     m = re.search(r"\*\*(\d+) queries\*\*", qtext)
     declared = int(m.group(1)) if m else -1
     if declared != len(QUERIES):
@@ -39,27 +33,19 @@ def main() -> int:
             "(scripts/gen_queries_md.py)"
         )
         ok = False
-    missing_q = [k for k in QUERIES if f"`{k}`" not in qtext]
-    if missing_q:
-        print(f"STALE: QUERIES.md missing {len(missing_q)} keys: {missing_q[:8]}")
-        ok = False
 
-    ppath = os.path.join(REPO, "PLANS.md")
-    ptext = open(ppath).read()
-    missing_p = [k for k in HEADLINE if f"| `{k}` |" not in ptext]
-    if missing_p:
-        print(
-            f"STALE: PLANS.md missing posture rows for {len(missing_p)} "
-            f"headline keys: {missing_p[:8]} — regenerate "
-            "(scripts/gen_plans_md.py)"
-        )
-        ok = False
+    for doc, gen in (("QUERIES.md", "gen_queries_md.py"), ("PLANS.md", "gen_plans_md.py")):
+        text = open(os.path.join(REPO, doc)).read()
+        missing = [k for k in QUERIES if f"| `{k}` |" not in text]
+        if missing:
+            print(
+                f"STALE: {doc} missing rows for {len(missing)} keys: "
+                f"{missing[:8]} — regenerate (scripts/{gen})"
+            )
+            ok = False
 
     if ok:
-        print(
-            f"doc freshness OK: QUERIES.md={declared} keys, PLANS.md "
-            f"covers all {len(HEADLINE)} headline keys"
-        )
+        print(f"doc freshness OK: QUERIES.md and PLANS.md cover all {len(QUERIES)} keys")
     return 0 if ok else 1
 
 

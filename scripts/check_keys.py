@@ -1,10 +1,9 @@
 """Single-key oracle check: run one or more registry keys Spark-vs-DuckDB
 at ``$SPARK_GRAFT_SF_DIR`` (default sf0.01) and print each verdict.
 
-The comparison is the one scripts/gen_local_correctness.py commits
-(``oracle_compare.fetch_spark``/``fetch_duck``/``compare_entry``/
-``entry_green``), so a key GREEN here is green in the full sweep. Does
-NOT touch LOCAL_CORRECTNESS.json.
+The per-key check is the one scripts/gen_local_correctness.py commits
+(``oracle_compare.check_key``), so a key GREEN here is green in the
+full sweep. Does NOT touch LOCAL_CORRECTNESS.json.
 
 Usage:  python scripts/check_keys.py sim_quantize_int8 sim_centroid_per_label
         python scripts/check_keys.py --category similarity
@@ -21,40 +20,17 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-import duckdb  # noqa: E402
-from pyspark.sql import SparkSession  # noqa: E402
-
-from bigdata_financial_reporting_spark.operators.cache import (  # noqa: E402
-    release_operator_caches,
-)
 from bigdata_financial_reporting_spark.oracle_compare import (  # noqa: E402
+    Oracle,
     canon_rows,
+    check_key,
     col_kinds,
-    compare_entry,
     entry_green,
-    fetch_duck,
-    fetch_spark,
-    tune_duck,
 )
 from bigdata_financial_reporting_spark.queries import QUERIES  # noqa: E402
-from bigdata_financial_reporting_spark.session import pin_semantics  # noqa: E402
+from bigdata_financial_reporting_spark.session import get_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def connect():
-    con = duckdb.connect()
-    tune_duck(con)
-    for t in TABLES:
-        path = os.path.join(SF_DIR, f"{t}.parquet")
-        # staged 10x tables are multi-file DIRECTORIES <t>.parquet/
-        pattern = f"{path}/*.parquet" if os.path.isdir(path) else path
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pattern}')")
-    return con
 
 
 def main() -> int:
@@ -68,40 +44,33 @@ def main() -> int:
         print(f"unknown or missing keys: {unknown}")
         return 2
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .appName("check-keys")
-        .getOrCreate()
+    spark = get_session(
+        "check-keys",
+        extra_conf={
+            "spark.sql.shuffle.partitions": "16",
+            "spark.ui.enabled": "false",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    pin_semantics(spark)
-    con = connect()
+    oracle = Oracle(SF_DIR)
 
     failures = 0
     for name in names:
-        spec = QUERIES[name]
         t0 = time.time()
         try:
-            s_cols, s_rows = fetch_spark(spec.fn(spark, SF_DIR))
-            if spec.oracle is None:
+            entry, (s_cols, s_rows), duck = check_key(
+                spark, QUERIES[name], SF_DIR, oracle
+            )
+            if duck is None:
                 print(f"{name}: rows_only rows={len(s_rows)} ({time.time()-t0:.1f}s)")
                 continue
-            try:
-                d_cols, d_rows = fetch_duck(con, spec.oracle)
-            except duckdb.Error:
-                # allocator-state-dependent OOM after a heavy oracle
-                # (round-7 sweep lesson) — retry once on a fresh
-                # connection before reporting an error
-                con.close()
-                con = connect()
-                d_cols, d_rows = fetch_duck(con, spec.oracle)
-            entry = compare_entry(s_cols, s_rows, d_cols, d_rows)
+            d_cols, d_rows = duck
             ok = entry_green(entry)
             failures += 0 if ok else 1
-            flags = " ".join(f"{k}={v}" for k, v in entry.items())
+            flags = " ".join(
+                f"{k}={entry[k]}"
+                for k in ("rows_match", "schema_match", "values_match", "kind_match")
+            )
             print(
                 f"{name}: {'GREEN' if ok else 'FAIL'} "
                 f"rows={len(s_rows)}/{len(d_rows)} {flags} ({time.time()-t0:.1f}s)"
@@ -120,9 +89,7 @@ def main() -> int:
         except Exception as exc:
             failures += 1
             print(f"{name}: ERROR {type(exc).__name__}: {exc}")
-        finally:
-            release_operator_caches()
-    con.close()
+    oracle.close()
     spark.stop()
     return 1 if failures else 0
 

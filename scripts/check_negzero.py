@@ -30,12 +30,8 @@ import duckdb
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bigdata_financial_reporting_spark.oracle_compare import connect_oracle  # noqa: E402
 from bigdata_financial_reporting_spark.queries import QUERIES  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
 
 DEFAULT_DIRS = [
     "/root/testdata/sf0.001",
@@ -118,30 +114,6 @@ def _execute_capped(con, sql, seconds: float = None):
     return cols, rows
 
 
-def _connect(sf_dir: str):
-    # spill + bounded memory: the 10x quadratic oracles otherwise build
-    # unspillable materializations against the 80%-of-RAM default and
-    # die (or hang the interrupt thread) under allocator pressure
-    from bigdata_financial_reporting_spark.oracle_compare import tune_duck
-
-    con = duckdb.connect()
-    tune_duck(con)
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.isdir(path):
-            # 10x staging writes multi-file table DIRECTORIES named
-            # <table>.parquet/part-*.parquet
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{path}/*.parquet')"
-            )
-        elif os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
-    return con
-
-
 #: recycle the connection every N oracles: at the 10x corpus a single
 #: connection's allocator state grows monotonically across hundreds of
 #: prepared+executed statements until the PROCESS (not the DuckDB
@@ -156,7 +128,7 @@ def _oracle_names() -> list[str]:
 
 
 def scan_dir(sf_dir: str, names: list[str] | None = None) -> dict:
-    con = _connect(sf_dir)
+    con = connect_oracle(sf_dir)
     hits: dict[str, list] = {}
     checked = 0
     since_reconnect = 0
@@ -168,7 +140,7 @@ def scan_dir(sf_dir: str, names: list[str] | None = None) -> dict:
             continue
         if since_reconnect >= RECONNECT_EVERY:
             con.close()
-            con = _connect(sf_dir)
+            con = connect_oracle(sf_dir)
             since_reconnect = 0
         since_reconnect += 1
         for attempt in (0, 1):
@@ -177,7 +149,7 @@ def scan_dir(sf_dir: str, names: list[str] | None = None) -> dict:
                 # heavy oracle): retry ONCE on a fresh connection before
                 # recording an error
                 con.close()
-                con = _connect(sf_dir)
+                con = connect_oracle(sf_dir)
                 since_reconnect = 0
             try:
                 # -0.0 can only live in FLOAT/DOUBLE output columns

@@ -24,7 +24,7 @@ def main() -> None:
     tag, suffix, *names = sys.argv[1:]
     outdir = os.path.join(REPO, "plans", tag)
     os.makedirs(outdir, exist_ok=True)
-    spark = get_session("dump-plan", master="local[8]")
+    spark = get_session("dump-plan")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         df = QUERIES[name].fn(spark, SF)

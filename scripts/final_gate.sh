@@ -68,8 +68,6 @@ python scripts/gen_sim_recall.py || fail "SIM_RECALL failed"
 commit_artifact SIM_RECALL.json
 python scripts/check_negzero.py || fail "NEGZERO sweep found hits"
 commit_artifact NEGZERO_SWEEP.json
-python scripts/gen_bench_local.py || fail "BENCH_LOCAL failed"
-commit_artifact BENCH_LOCAL.json
 
 # Refuse to start the 10x sweep on any remaining dirt: a pending
 # source change would make SCALE_CORRECTNESS's clean stamp a lie.

@@ -1,6 +1,6 @@
 """Emit LOCAL_CORRECTNESS.json — the full mirror of the driver's t2
 gate, covering EVERY registry key (scripts/check_keys.py runs the same
-comparison for chosen keys).
+per-key check, ``oracle_compare.check_key``, for chosen keys).
 
 Per query: Spark vs DuckDB row count, column-name set, the
 driver-strict canonical value match, and per-column type-kind parity —
@@ -26,60 +26,36 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-import duckdb  # noqa: E402
-from pyspark.sql import SparkSession  # noqa: E402
-
 from bigdata_financial_reporting_spark.oracle_compare import (  # noqa: E402
-    compare_entry,
+    Oracle,
+    check_key,
     entry_green,
-    fetch_duck,
-    fetch_spark,
     provenance,
 )
 from bigdata_financial_reporting_spark.queries import QUERIES  # noqa: E402
-from bigdata_financial_reporting_spark.session import pin_semantics  # noqa: E402
+from bigdata_financial_reporting_spark.session import get_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 def main() -> int:
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .appName("local-correctness")
-        .getOrCreate()
+    spark = get_session(
+        "local-correctness",
+        extra_conf={
+            "spark.sql.shuffle.partitions": "16",
+            "spark.ui.enabled": "false",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    pin_semantics(spark)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    oracle = Oracle(SF_DIR)
 
     out = {}
     t_all = time.time()
     for name, spec in QUERIES.items():
-        entry = {}
         try:
-            s_cols, s_rows = fetch_spark(spec.fn(spark, SF_DIR))
-            entry["spark_rows"] = len(s_rows)
-            if spec.oracle is None:
-                entry["mode"] = "rows_only"
-                entry["non_empty"] = len(s_rows) > 0
-            else:
-                d_cols, d_rows = fetch_duck(con, spec.oracle)
-                entry["mode"] = "oracle"
-                entry["oracle_rows"] = len(d_rows)
-                entry.update(compare_entry(s_cols, s_rows, d_cols, d_rows))
+            out[name] = check_key(spark, spec, SF_DIR, oracle)[0]
         except Exception as exc:  # one broken query must not void the run
-            entry["error"] = f"{type(exc).__name__}: {exc}"[:300]
-        out[name] = entry
+            out[name] = {"error": f"{type(exc).__name__}: {exc}"[:300]}
 
     oracle_keys = [n for n, e in out.items() if e.get("mode") == "oracle"]
     ok = [n for n in oracle_keys if entry_green(out[n])]
@@ -102,6 +78,7 @@ def main() -> int:
         f"fully green, {record['n_rows_only']} rows-only, "
         f"{record['wall_sec']}s -> {path}"
     )
+    oracle.close()
     spark.stop()
     return 0 if not record["oracle_red"] else 1
 

@@ -1,40 +1,37 @@
-"""Regenerate PLANS.md: physical-plan posture of the bench headline queries."""
+"""Regenerate PLANS.md: physical-plan posture of every registry key,
+grouped by category as QUERIES.md is."""
 import sys, os
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from bench import HEADLINE
 from bigdata_financial_reporting_spark.session import get_session
 from bigdata_financial_reporting_spark.queries import QUERIES
 from bigdata_financial_reporting_spark.plans.inspect import plan_report
+from bigdata_financial_reporting_spark.operators.cache import release_operator_caches
 
-spark = get_session("gen-plans", master="local[8]")
+spark = get_session("gen-plans")
 spark.sparkContext.setLogLevel("ERROR")
 SF = "/root/testdata/sf0.01"
 
-def _posture_rows(names):
-    rows = []
-    for name in names:
-        r = plan_report(QUERIES[name].fn(spark, SF))
-        joins = []
-        if r["broadcast_hash_join"]:
-            joins.append("broadcast")
-        if r["sort_merge_join"]:
-            joins.append("sort-merge")
-        if r["broadcast_nested_loop"]:
-            joins.append("bcast-nested-loop")
-        if r["cartesian"]:
-            joins.append("CARTESIAN!")
-        rows.append(
-            f"| `{name}` | {', '.join(joins) or chr(8212)} | {r['exchanges']} "
-            f"| {r['reused_exchanges']} | {len(r['pushed_filters'])} "
-            f"| {r['codegen_spans']} | {'YES' if r['rowbased_python_udf'] else 'no'} |"
-        )
-    return rows
 
-HEADER = "| query | joins | shuffles | reused | pushed filters | codegen spans | row-Python |"
-SEP = "|---|---|---|---|---|---|---|"
+def _posture_row(name):
+    r = plan_report(QUERIES[name].fn(spark, SF))
+    joins = []
+    if r["broadcast_hash_join"]:
+        joins.append("broadcast")
+    if r["sort_merge_join"]:
+        joins.append("sort-merge")
+    if r["broadcast_nested_loop"]:
+        joins.append("bcast-nested-loop")
+    if r["cartesian"]:
+        joins.append("CARTESIAN!")
+    return (
+        f"| `{name}` | {', '.join(joins) or chr(8212)} | {r['exchanges']} "
+        f"| {r['reused_exchanges']} | {len(r['pushed_filters'])} "
+        f"| {r['codegen_spans']} | {'YES' if r['rowbased_python_udf'] else 'no'} |"
+    )
+
 
 lines = [
-    "# Physical-plan posture — bench headline queries",
+    "# Physical-plan posture — every registry key",
     "",
     "Auto-generated by `scripts/gen_plans_md.py` (plans at sf0.01, cold",
     "cache). The scale properties the engine commits to, read straight",
@@ -42,142 +39,23 @@ lines = [
     "scans, bounded shuffle counts, no cartesian products, no row-based",
     "Python outside the explicit UDF surface.",
     "",
-    "| query | joins | shuffles | reused | pushed filters | codegen spans | row-Python |",
-    "|---|---|---|---|---|---|---|",
 ]
+cats = {}
+for spec in QUERIES.values():
+    cats.setdefault(spec.category or "misc", []).append(spec.name)
 spark.catalog.clearCache()
-lines += _posture_rows(HEADLINE)
-lines.append("")
-
-# Round-4 representative operators: same posture table for the new
-# families (finance rollups, SQL-subquery shapes, layout/linear-algebra
-# operators, Spark-4 surface).
-ROUND4 = [
-    "fin_ohlc_bars", "fin_ema_window", "fin_gapfill_interpolate",
-    "fin_beta_market", "fin_rsi_window", "fin_return_corr_pairs",
-    "tpch_q17_shape", "tpch_q2_shape", "agg_weighted_median",
-    "window_longest_streak", "text_chunk_overlap", "text_quality_logreg",
-    "text_keywords_tfidf_topk", "text_collocations_pmi",
-    "emb_covariance_matrix", "ops_zorder_layout", "join_lateral_topn",
-    "agg_bitmap_distinct", "fn_variant_json",
-]
-lines += [
-    "## Round-4 operators",
-    "",
-    "| query | joins | shuffles | reused | pushed filters | codegen spans | row-Python |",
-    "|---|---|---|---|---|---|---|",
-]
-lines += _posture_rows(ROUND4)
-lines.append("")
-
-# Round-5 operators (round-5 verdict item 4): the PQ/IVF-PQ ANN
-# family, semantic dedup, and the remaining round-5 additions get the
-# same published posture — broadcast codebooks/centroids, bounded
-# exchanges, no cartesian products, Python only in the explicit
-# mapInPandas surfaces.
-ROUND5 = [
-    "sim_pq_encode", "sim_ivfpq_topk", "dedup_semantic_semdedup",
-    "window_hampel_outliers", "join_point_in_time_scd2",
-    "ops_time_travel_versions",
-]
-lines += [
-    "## Round-5 operators",
-    "",
-    HEADER,
-    SEP,
-]
-lines += _posture_rows(ROUND5)
-lines.append("")
-
-# Round-6 operators: the completed TPC-H suite's new shapes + the
-# round-6 surface keys.
-ROUND6 = [
-    "tpch_q6_shape", "tpch_q9_shape", "tpch_q11_shape", "tpch_q12_shape",
-    "tpch_q13_shape", "tpch_q15_shape", "tpch_q18_shape", "tpch_q20_shape",
-    "tpch_q21_shape", "tpch_q22_shape", "src_xml_roundtrip",
-    "fn_interval_family", "sql_group_by_all", "text_bpe_merge_step",
-    "sql_named_parameters", "sql_execute_immediate", "stat_spearman_corr",
-    "stat_mann_whitney_u", "stat_anova_f", "ts_seasonal_decompose",
-    "text_flesch_readability", "text_html_strip", "ops_delete_update_cow",
-    "ops_partition_skew_report", "mix_domain_rebalance",
-    "emb_pca_power_iteration", "udf_udtf_arrow", "src_compressed_roundtrip",
-    "ops_snapshot_expiry", "dedup_url_canonicalize",
-]
-lines += [
-    "## Round-6 operators",
-    "",
-    HEADER,
-    SEP,
-]
-lines += _posture_rows(ROUND6)
-lines.append("")
-
-# Round-7 operators: the second stats/finance/embedding batch plus the
-# six budget-filling keys (KMV sketch, bfill, rolling median, grid
-# radius join, partition-pruning proof, matryoshka audit).
-ROUND7 = [
-    "quality_gopher_rules", "mix_epoch_upsample", "split_leakage_safe",
-    "text_charclass_profile", "text_word_run_lengths",
-    "stat_kruskal_wallis", "stat_chisq_gof", "stat_cohens_d",
-    "stat_kendall_tau_b", "stat_runs_test", "fin_macd_daily",
-    "fin_atr_14", "fin_obv", "fin_stochastic_k", "fin_kurtosis_returns",
-    "ts_value_histogram2d", "emb_kmeans_lloyd_step", "emb_label_margin",
-    "sim_knn_graph_mutual", "emb_dims_variance_topk",
-    "join_asof_tolerance", "join_dim_snowflake", "join_exists_agg",
-    "window_percent_rank_cume", "window_nth_value_frames",
-    "window_gaps_islands", "src_binaryfile_scan", "ops_compaction_bins",
-    "agg_kmv_distinct_sketch", "ts_backward_fill",
-    "window_running_median", "join_grid_neighbors",
-    "src_partition_pruning_scan", "emb_matryoshka_prefix_topk",
-]
-lines += [
-    "## Round-7 operators",
-    "",
-    HEADER,
-    SEP,
-]
-lines += _posture_rows(ROUND7)
-lines.append("")
-
-# Round-8 operators (round-8 verdict item 3: the six new keys need
-# committed posture rows; dedup_embedding_cosine /
-# agg_regression_family / fin_momentum_rank are covered by the
-# headline table above, as are the round-10 extensions).
-ROUND8 = [
-    "stat_levene", "agg_theta_sketch_intersection", "fin_sortino",
-    "quality_perplexity_bucket", "emb_signbit_fingerprint",
-]
-lines += [
-    "## Round-8 operators",
-    "",
-    HEADER,
-    SEP,
-]
-lines += _posture_rows(ROUND8)
-lines.append("")
-
-# Round-11 operators: the registry extensions not already covered by
-# the headline table (sim_ivfpq_trained_topk / stream_cdc_upsert_sink /
-# agg_tdigest_quantiles are benched headliners above).
-ROUND11 = [
-    "stream_stream_left_outer",
-    "stat_wilcoxon_signed_rank",
-    "fin_jarque_bera",
-    "ops_vacuum_orphan_files",
-    "stat_friedman",
-    "fin_parkinson_vol",
-    "ops_clone_shallow",
-    "stat_bartlett",
-    "join_asof_nearest",
-]
-lines += [
-    "## Round-11 operators",
-    "",
-    HEADER,
-    SEP,
-]
-lines += _posture_rows(ROUND11)
-lines.append("")
+for cat in sorted(cats):
+    names = sorted(cats[cat])
+    lines += [
+        f"## {cat} ({len(names)})",
+        "",
+        "| query | joins | shuffles | reused | pushed filters | codegen spans | row-Python |",
+        "|---|---|---|---|---|---|---|",
+    ]
+    for name in names:
+        lines.append(_posture_row(name))
+        release_operator_caches()
+    lines.append("")
 out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
 open(out, "w").write("\n".join(lines))
 print(f"wrote {out}")

@@ -49,20 +49,15 @@ import duckdb  # noqa: E402
 from bigdata_financial_reporting_spark.oracle_compare import (  # noqa: E402
     canon_digest,
     compare_digest_entry,
+    connect_oracle,
     entry_green,
     fetch_spark,
     is_jvm_death,
     provenance,
-    tune_duck,
 )
 from bigdata_financial_reporting_spark.queries import QUERIES  # noqa: E402
 from bigdata_financial_reporting_spark.session import get_session  # noqa: E402
 from check_negzero import _execute_capped  # noqa: E402
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 #: per-engine, per-query wall cap (seconds). Generous enough for every
 #: linear/linearithmic key at 10x; only the all-pairs ground truths
@@ -118,37 +113,6 @@ def _spark_rows_capped(spark, df, tag: str):
         sc.setJobGroup("", "")
 
 
-def _connect(sf_dir: str):
-    """Fresh DuckDB connection with spill enabled. The default
-    in-memory connection has NO temp_directory, so a big oracle
-    materialization cannot spill and dies with
-    OutOfMemoryException once the co-resident 8g JVM plus ~300
-    queries of allocator state squeeze it (round-7 finding:
-    fin_macd_daily and sim_ivf_trained_topk OOM'd in the full sweep
-    but pass standalone). Bound the limit explicitly and give it a
-    spill dir; preserve_insertion_order=false releases the ordering
-    buffers our order-insensitive compare never needed."""
-    con = duckdb.connect()
-    tune_duck(con)
-    _views(con, sf_dir)
-    return con
-
-
-def _views(con, sf_dir: str) -> None:
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.isdir(path):
-            # 10x staging writes multi-file table DIRECTORIES
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{path}/*.parquet')"
-            )
-        elif os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
-
-
 def _duck_digest_child_main(name: str, sf_dir: str) -> int:
     """Child-process mode: run ONE oracle at sf_dir and print its
     comparison digest as a JSON line. The DuckDB side runs
@@ -163,7 +127,7 @@ def _duck_digest_child_main(name: str, sf_dir: str) -> int:
         print(json.dumps({"error": f"unknown or oracle-less key {name!r}"}))
         return 0
     try:
-        con = _connect(sf_dir)
+        con = connect_oracle(sf_dir)
         cols, rows = _execute_capped(
             con,
             spec.oracle,

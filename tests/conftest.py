@@ -25,7 +25,7 @@ TABLES = [
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_session("bdfr-tests", master="local[8]")
+    s = get_session("bdfr-tests")
     yield s
 
 

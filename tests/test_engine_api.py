@@ -142,27 +142,6 @@ def test_try_arithmetic_null_path_exists_at_test_sf(spark, sf_dir):
     assert nulls < len(rows), "all-NULL safe_div: the happy path is untested"
 
 
-def test_bench_headline_keys_resolve_in_registry():
-    """bench.py's HEADLINE list is maintained by hand; a typo'd or
-    renamed key would crash a ``python bench.py`` run instead of
-    failing here first. Import the list without importing the runner's
-    Spark session."""
-    import importlib.util
-    from pathlib import Path
-
-    from bigdata_financial_reporting_spark.queries import queries_map
-
-    spec = importlib.util.spec_from_file_location(
-        "bench", Path(__file__).resolve().parents[1] / "bench.py"
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-    registry = set(queries_map())
-    unknown = [n for n in bench.HEADLINE if n not in registry]
-    assert not unknown, f"bench HEADLINE names not in registry: {unknown}"
-    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE), "duplicate keys"
-
-
 def test_entry_exports_registry_order():
     """The driver contract exports the registry as it is: every key, in
     registry order, and an oracle for exactly the keys that have one."""

@@ -216,6 +216,27 @@ def test_canon_is_driver_strict():
     assert _negzero_cells([(decimal.Decimal("-0.0"),)])
 
 
+def test_compare_entry_fields():
+    """Each field of the comparison record the sweeps commit: order of
+    rows and columns is free, values compare driver-strict, and a
+    column that is all NULL on one side matches any kind."""
+    from bigdata_financial_reporting_spark.oracle_compare import (
+        compare_entry,
+        entry_green,
+    )
+
+    s = compare_entry(["a", "b"], [(1, 0.5), (2, None)], ["b", "a"], [(None, 2), (0.5, 1)])
+    assert entry_green(s)
+    assert compare_entry(["a"], [(0.0,)], ["a"], [(-0.0,)]) == {
+        "rows_match": True, "schema_match": True,
+        "values_match": False, "kind_match": True,
+    }
+    assert not compare_entry(["a"], [(1,)], ["a"], [(1,), (1,)])["rows_match"]
+    assert not compare_entry(["a"], [(1,)], ["x"], [(1,)])["schema_match"]
+    assert not compare_entry(["a"], [(1,)], ["a"], [(1.0,)])["kind_match"]
+    assert compare_entry(["a"], [(None,)], ["a"], [(1.0,)])["kind_match"]
+
+
 @pytest.mark.parametrize(
     "spec", _tiered(ROWS_ONLY_SPECS, _ROWS_SMOKE), ids=lambda s: s.name
 )

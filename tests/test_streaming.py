@@ -285,3 +285,27 @@ def test_content_dedup_multi_batch_equals_batch(spark, sf_dir, tmp_path):
         .collect()
     }
     assert streamed == batch and len(streamed) > 0
+
+
+def test_cdc_upsert_sink_leaves_only_its_final_snapshot(spark, sf_dir):
+    """stream_cdc_upsert_sink stages the change log, drains it and
+    writes a snapshot per micro-batch under the temp dir. Only the
+    final snapshot, which the returned frame reads, may outlive the
+    call: at most one new ``bdfr_cdc_*`` entry per call."""
+    import tempfile
+
+    from bigdata_financial_reporting_spark.queries import QUERIES
+
+    def cdc_entries():
+        return {
+            n for n in os.listdir(tempfile.gettempdir()) if n.startswith("bdfr_cdc_")
+        }
+
+    before = cdc_entries()
+    df = QUERIES["stream_cdc_upsert_sink"].fn(spark, sf_dir)
+    added = cdc_entries() - before
+    assert len(added) <= 1, f"leaked temp dirs: {sorted(added)}"
+    for d in added:
+        kept = os.listdir(os.path.join(tempfile.gettempdir(), d))
+        assert len(kept) == 1, f"{d} keeps more than the final snapshot: {kept}"
+    assert df.count() > 0, "the returned frame must still read its snapshot"
