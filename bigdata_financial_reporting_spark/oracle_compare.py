@@ -1,42 +1,46 @@
-"""The ONE shared fetch + canonicalization path for every oracle
-harness (round-6 verdict item 2).
+"""The ONE shared fetch + canonicalization path and the ONE sweep loop
+for every oracle harness.
 
-Three harnesses used to fetch results three different ways —
-tests/test_oracle.py via ``collect()``/``fetchall()``,
-scripts/gen_local_correctness.py via ``toPandas()``/``.df()`` (both
-NULL->NaN), and scripts/gen_scale_correctness.py via ``toPandas()``
-vs ``fetchall()`` — the last one ASYMMETRIC (Spark NULL doubles became
-NaN, DuckDB NULLs stayed None), which manufactured a false at-scale
-red for ``fn_try_arithmetic``, the key whose entire purpose is
-emitting NULLs. Everything now goes through this module:
+Three harnesses used to fetch results three different ways, the last
+one ASYMMETRIC (Spark NULL doubles became NaN through ``toPandas()``,
+DuckDB NULLs stayed None), which manufactured a false at-scale red for
+``fn_try_arithmetic``, the key whose entire purpose is emitting NULLs.
+Everything now goes through this module:
 
 - :func:`fetch_spark` / :func:`fetch_duck` — raw row tuples from
   ``collect()`` and ``fetchall()``: NULL is ``None`` on both sides,
   NaN stays a float NaN on both sides, no pandas coercion anywhere.
 - :func:`canon_value` / :func:`canon_rows` — the driver-strict canon
   (bitwise IEEE doubles, exact decimal value strings, -0.0 kept
-  distinct), previously defined in tests/test_oracle.py, which now
-  imports it from here.
+  distinct); tests/test_oracle.py imports it from here.
 - :func:`col_kinds` — per-column Python-type kinds from the raw rows
   (the typed-rendering parity the pandas dtype check approximated,
   without pandas' int+NULL -> float coercion).
 - :func:`connect_oracle` / :class:`Oracle` / :func:`check_key` — the
-  one tuned DuckDB connection over the fixture tables, and the per-key
-  check scripts/check_keys.py prints and
-  scripts/gen_local_correctness.py commits.
+  one tuned DuckDB connection over the fixture tables (recycled, and
+  retried once on a fresh connection), and the per-key check
+  scripts/check_keys.py prints and scripts/gen_local_correctness.py
+  and scripts/gen_stream_equiv.py commit.
+- :func:`sweep_keys` / :func:`sweep` — the one per-key sweep loop
+  behind every keyed evidence artifact (LOCAL_CORRECTNESS,
+  SCALE_CORRECTNESS, NEGZERO_SWEEP): one wall cap per key, abort on
+  JVM death, per-key ``sec``, and one verdict rule
+  (:func:`key_verdict`: an error is red). :func:`sweep_in_child` runs
+  a DuckDB-only slice of a sweep in a fresh process.
 - :func:`provenance` — git SHA + wall timestamp for every emitted
-  artifact, so a stale artifact is mechanically detectable (round-6
-  verdict item 6: the crashed-sweep confusion cost the adjudication
-  an hour).
+  artifact, so a stale artifact is mechanically detectable.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import decimal
+import json
 import math
 import struct
 import subprocess
+import sys
+import threading
 import time
 from pathlib import Path
 
@@ -255,8 +259,9 @@ def tune_duck(con) -> None:
     """Spill + bounded-memory settings every oracle harness needs
     (round-7 lesson: the default in-memory connection cannot spill,
     and ~300 queries of allocator state next to an 8g JVM OOM the
-    heaviest oracles). Shared by check_keys / check_negzero /
-    gen_scale_correctness so no harness drifts back to an untuned
+    heaviest oracles). Every DuckDB connection an oracle harness opens
+    comes from :func:`connect_oracle`, which calls this, and perfbench
+    calls it directly, so no harness drifts back to an untuned
     connection.
 
     The spill dir is RUN-UNIQUE with an atexit cleanup (round-14: a
@@ -304,25 +309,70 @@ def connect_oracle(sf_dir: str):
     return con
 
 
+#: recycle the oracle connection every N statements: at the 10x corpus
+#: a single connection's allocator state grows monotonically across
+#: hundreds of prepared+executed statements until the PROCESS (not the
+#: DuckDB memory_limit) fails tiny mallocs with bad_alloc, poisoning
+#: every later query (round-8 finding — the whole udf_*/window_* tail
+#: errored after one mid-run OOM and the sweep looked hung).
+RECONNECT_EVERY = 40
+
+
 class Oracle:
-    """A :func:`connect_oracle` connection that retries a failed query
+    """A :func:`connect_oracle` connection, recycled every
+    :data:`RECONNECT_EVERY` statements, that retries a failed query
     once on a fresh connection: DuckDB's allocator state after a heavy
     oracle can fail the next one, which then passes standalone
-    (round-7 sweep lesson). A deterministic oracle bug fails both."""
+    (round-7 sweep lesson; bad_alloc while co-resident with the 8g
+    Spark JVM in the r12 10x sweep). A deterministic oracle bug fails
+    both. An interrupt (the sweep's wall cap) is never retried."""
 
     def __init__(self, sf_dir: str):
         self.sf_dir = sf_dir
         self.con = connect_oracle(sf_dir)
+        self.used = 0
+
+    def _reconnect(self) -> None:
+        self.con.close()
+        self.con = connect_oracle(self.sf_dir)
+        self.used = 0
 
     def fetch(self, sql):
         import duckdb
 
+        if self.used >= RECONNECT_EVERY:
+            self._reconnect()
+        self.used += 1
         try:
             return fetch_duck(self.con, sql)
+        except duckdb.InterruptException:
+            raise
         except duckdb.Error:
-            self.con.close()
-            self.con = connect_oracle(self.sf_dir)
+            self._reconnect()
             return fetch_duck(self.con, sql)
+
+    def interrupt(self) -> None:
+        """Interrupt the running statement. Tried twice: an interrupt
+        that dies (round-7: MemoryError inside the timer thread under
+        allocator pressure) must not leave the query running
+        unbounded."""
+        for _ in range(2):
+            try:
+                self.con.interrupt()
+                return
+            except Exception:
+                pass
+
+    def drain(self) -> None:
+        """Swallow a pending interrupt: a cap that fires in the gap
+        between ``fetchall()`` returning and the timer's cancel leaves
+        one behind, and it would abort the NEXT oracle."""
+        import duckdb
+
+        try:
+            self.con.execute("SELECT 1").fetchall()
+        except duckdb.InterruptException:
+            pass
 
     def close(self) -> None:
         self.con.close()
@@ -347,6 +397,179 @@ def check_key(spark, spec, sf_dir: str, oracle: Oracle):
         return entry, (s_cols, s_rows), (d_cols, d_rows)
     finally:
         release_operator_caches()
+
+
+#: Per-key wall cap (seconds) of every sweep. Generous for every
+#: linear/linearithmic key at the 10x corpus; only deliberately
+#: quadratic ground truths approach it. A capped key is listed under
+#: ``timeouts`` — visible, never silent, and not red.
+KEY_SECONDS = 90.0
+
+#: Per-key cap overrides, for DuckDB ground truths that are slow by
+#: construction at the 10x corpus and still worth the wall:
+#: dedup_ngram_jaccard's exact lang-blocked all-pairs Jaccard CTE
+#: measured 383 s (Spark side 74 s), and fn_date's 14 date-function
+#: columns over 6M rows 335 s standalone (round 13).
+KEY_SECONDS_OVERRIDE = {"dedup_ngram_jaccard": 600.0, "fn_date": 600.0}
+
+
+def key_seconds(name: str) -> float:
+    return KEY_SECONDS_OVERRIDE.get(name, KEY_SECONDS)
+
+
+class JvmDied(Exception):
+    """The local JVM died mid-sweep (:func:`is_jvm_death`)."""
+
+
+def key_verdict(entry: dict) -> str:
+    """The one verdict rule of every sweep: ``"timeout"`` (listed,
+    non-fatal), ``"green"`` or ``"red"``. A comparison key is green
+    only with mode ``"oracle"`` and :func:`entry_green`; a signbit scan
+    (check_negzero) only with no hits. Everything else — an error, a
+    rows-only or unrecognised entry — is red, so no key can drop out
+    of the count."""
+    if "timeout" in entry:
+        return "timeout"
+    if "error" in entry:
+        return "red"
+    if entry.get("mode") == "oracle":
+        return "green" if entry_green(entry) else "red"
+    if entry.get("mode") == "signbit":
+        return "red" if entry["hits"] else "green"
+    return "red"
+
+
+def tally(queries: dict) -> dict:
+    """Key names by :func:`key_verdict`."""
+    out = {"green": [], "red": [], "timeout": []}
+    for name, entry in queries.items():
+        out[key_verdict(entry)].append(name)
+    return out
+
+
+def sweep_keys(keys, check, *, spark=None, oracle=None) -> dict:
+    """Run ``check(name) -> entry`` for every key and return
+    ``{name: entry}``, each entry stamped with its wall ``sec``.
+
+    One wall cap per key (:func:`key_seconds`): when it expires, the
+    key's Spark job group is cancelled and ``oracle``'s running DuckDB
+    statement interrupted; a check that then raises is recorded as a
+    timeout. Any other exception is recorded as the key's ``error``
+    (red), except a JVM death, which raises :class:`JvmDied`: hundreds
+    of bogus per-key errors from a dead session once made a
+    "completed" artifact (round-6)."""
+    out = {}
+    for name in keys:
+        t0 = time.time()
+        fired = []
+        tag = f"sweep-{name}"
+        if spark is not None:
+            spark.sparkContext.setJobGroup(tag, tag, interruptOnCancel=True)
+
+        def _cap():
+            fired.append(True)
+            if spark is not None:
+                spark.sparkContext.cancelJobGroup(tag)
+            if oracle is not None:
+                oracle.interrupt()
+
+        timer = threading.Timer(key_seconds(name), _cap)
+        timer.start()
+        try:
+            entry = check(name)
+        except Exception as exc:
+            if is_jvm_death(exc):
+                raise JvmDied(f"{name}: {type(exc).__name__}: {exc}"[:400]) from exc
+            if fired:
+                interrupted = "Interrupt" in type(exc).__name__
+                entry = {"timeout": "duckdb" if interrupted else "spark"}
+            else:
+                entry = {"error": f"{type(exc).__name__}: {exc}"[:300]}
+        finally:
+            timer.cancel()
+            timer.join()
+        if spark is not None:
+            spark.sparkContext.setJobGroup("", "")
+        if fired and oracle is not None:
+            oracle.drain()
+        entry["sec"] = round(time.time() - t0, 2)
+        out[name] = entry
+    return out
+
+
+def sweep(path, keys, check, build, *, spark=None, oracle=None) -> int:
+    """The sweep behind a keyed evidence artifact: :func:`sweep_keys`,
+    then write ``{**provenance(), **build(queries, verdicts),
+    "wall_sec": ...}`` to ``path`` (``verdicts`` is :func:`tally`'s).
+    Returns 3 with NO artifact written on a JVM death, 1 if any key
+    is red, else 0 — a timeout alone stays 0."""
+    t0 = time.time()
+    try:
+        queries = sweep_keys(keys, check, spark=spark, oracle=oracle)
+    except JvmDied as exc:
+        print(f"FATAL: JVM death while running {exc}", file=sys.stderr)
+        return 3
+    v = tally(queries)
+    record = {
+        **provenance(),
+        **build(queries, v),
+        "wall_sec": round(time.time() - t0, 1),
+    }
+    with open(path, "w") as fh:
+        json.dump(record, fh, indent=2)
+    print(
+        f"{len(v['green'])}/{len(queries)} keys green, red={v['red']}, "
+        f"{len(v['timeout'])} timeouts ({record['wall_sec']}s) -> {path}"
+    )
+    return 1 if v["red"] else 0
+
+
+#: Child-process code for :func:`sweep_in_child`: load the module that
+#: defines the function (a package module or a script, by file path),
+#: call it, and print its result as the last stdout line.
+_CHILD = (
+    "import importlib.util, json, sys\n"
+    "sys.path.insert(0, sys.argv[1])\n"
+    "spec = importlib.util.spec_from_file_location('_sweep_child', sys.argv[2])\n"
+    "mod = importlib.util.module_from_spec(spec)\n"
+    "spec.loader.exec_module(mod)\n"
+    "print(json.dumps(getattr(mod, sys.argv[3])(*json.loads(sys.argv[4]))))\n"
+)
+
+
+def sweep_in_child(fn, sf_dir: str, names: list) -> dict:
+    """``fn(sf_dir, names)`` — a module-level function that returns
+    :func:`sweep_keys`' ``{name: entry}`` for a DuckDB-only check — run
+    in a fresh Python process. DuckDB runs out of process because its
+    allocator and mmap state outlive every connect/close pair: the
+    round-11 sweeps segfaulted after heavy window oracles exhausted
+    vm.max_map_count, killing the whole run. The result travels back
+    as the child's last stdout line of JSON. A nonzero rc or a missing
+    JSON object marks every key of ``names`` as an error (red); an
+    expired wall (the keys' caps plus 900 s for fetching and digesting
+    multi-million-row outputs) as a timeout."""
+    mod = sys.modules[fn.__module__]
+    wall = sum(key_seconds(n) for n in names) + 900
+    argv = [
+        sys.executable, "-c", _CHILD,
+        str(Path(__file__).resolve().parents[1]),
+        str(Path(mod.__file__).resolve()),
+        fn.__name__,
+        json.dumps([sf_dir, list(names)]),
+    ]
+    try:
+        proc = subprocess.run(argv, capture_output=True, text=True, timeout=wall)
+    except subprocess.TimeoutExpired:
+        return {n: {"timeout": "child"} for n in names}
+    if proc.returncode != 0:
+        err = f"child rc={proc.returncode}: {(proc.stderr or '').strip()[-300:]}"
+    else:
+        try:
+            out = json.loads(proc.stdout.strip().splitlines()[-1])
+            return {n: out.get(n, {"error": "no entry from child"}) for n in names}
+        except (ValueError, IndexError, AttributeError):
+            err = f"child printed no JSON object: {proc.stdout[-200:]!r}"
+    return {n: {"error": err} for n in names}
 
 
 def canon_digest(cols, rows) -> dict:

@@ -20,6 +20,7 @@ Floors mirror tests/test_llm_ops.py: ivf >= 0.2, trained ivf >= 0.8,
 lsh self-hit = 1.0, near-dup equality = exact.
 
 Run from the repo root:  python scripts/gen_sim_recall.py
+Exit code: 0 when every floor is met (``all_floors_met``), else 1.
 """
 
 from __future__ import annotations
@@ -32,7 +33,6 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from bigdata_financial_reporting_spark.operators.dedup import (  # noqa: E402
@@ -52,7 +52,7 @@ from bigdata_financial_reporting_spark.operators.simhash import (  # noqa: E402
     simhash_frame,
     simhash_pairs,
 )
-from bigdata_financial_reporting_spark.session import pin_semantics  # noqa: E402
+from bigdata_financial_reporting_spark.session import get_session  # noqa: E402
 from bigdata_financial_reporting_spark.sources.catalog import load_table  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -76,16 +76,15 @@ def _topk_metrics(ann_rows, exact_top, exact_scores):
     }
 
 
-def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .appName("sim-recall")
-        .getOrCreate()
+def main() -> int:
+    spark = get_session(
+        "sim-recall",
+        extra_conf={
+            "spark.sql.shuffle.partitions": "16",
+            "spark.ui.enabled": "false",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    pin_semantics(spark)
     t0 = time.time()
 
     e = load_table(spark, SF_DIR, "embeddings")
@@ -388,7 +387,8 @@ def main() -> None:
         json.dump(out, f, indent=2)
     print(json.dumps(out, indent=2))
     spark.stop()
+    return 0 if out["all_floors_met"] else 1
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

@@ -4,7 +4,9 @@ The driver's hash gate cannot execute streaming queries' multi-batch
 semantics, so this artifact records, per §2B.10 query:
 
 - the availableNow-drained streaming result vs its DuckDB batch oracle
-  (row count + order-insensitive canonical value match) at sf0.01;
+  at sf0.01, through ``oracle_compare.check_key`` (the per-key check
+  LOCAL_CORRECTNESS.json commits: row count, schema, canonical values
+  and per-column kind parity);
 - the outcome of the multi-batch watermark TIMING tests
   (tests/test_streaming.py run via pytest), which no batch oracle can
   express;
@@ -19,6 +21,9 @@ semantics, so this artifact records, per §2B.10 query:
   the checkable form of the 100 TB claim that their state is
   watermark-BOUNDED, not accreting.
 
+Exit code 1 when any key disagrees with its oracle
+(``all_equivalent: false``) or violates watermark eviction.
+
 Run from the repo root:  python scripts/gen_stream_equiv.py
 """
 
@@ -32,20 +37,18 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "tests"))
 
-import duckdb  # noqa: E402
-from pyspark.sql import SparkSession  # noqa: E402
-
+from bigdata_financial_reporting_spark.oracle_compare import (  # noqa: E402
+    Oracle,
+    check_key,
+    key_verdict,
+    provenance,
+)
 from bigdata_financial_reporting_spark.queries import QUERIES  # noqa: E402
-from bigdata_financial_reporting_spark.session import pin_semantics  # noqa: E402
-from test_oracle import canon_rows  # noqa: E402  (the local gate's canon)
+from bigdata_financial_reporting_spark.session import get_session  # noqa: E402
+from bigdata_financial_reporting_spark.streaming import runner  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 #: Keys whose stateful operators MUST evict on watermark during the
 #: availableNow drain: their fixtures stage multiple stream files, so
@@ -98,23 +101,16 @@ def state_witness(progress: list[dict]) -> dict:
     }
 
 
-def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .appName("stream-equiv")
-        .getOrCreate()
+def main() -> int:
+    spark = get_session(
+        "stream-equiv",
+        extra_conf={
+            "spark.sql.shuffle.partitions": "16",
+            "spark.ui.enabled": "false",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    pin_semantics(spark)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-
-    from bigdata_financial_reporting_spark.streaming import runner
+    oracle = Oracle(SF_DIR)
 
     queries = {}
     eviction_violations = []
@@ -123,13 +119,8 @@ def main() -> None:
             continue
         t0 = time.time()
         runner.LAST_DRAIN_PROGRESS[:] = []
-        sdf = spec.fn(spark, SF_DIR)
-        s_cols = sdf.columns
-        s_rows = [tuple(r) for r in sdf.collect()]
-        entry = {
-            "spark_rows": len(s_rows),
-            "wall_sec": round(time.time() - t0, 3),
-        }
+        entry = check_key(spark, spec, SF_DIR, oracle)[0]
+        entry["wall_sec"] = round(time.time() - t0, 3)
         witness = state_witness(runner.LAST_DRAIN_PROGRESS)
         if witness["n_batches"]:
             entry["state"] = witness
@@ -150,19 +141,6 @@ def main() -> None:
                     f"{name}: watermark={witness['final_watermark']} "
                     f"operators={witness['operators']}"
                 )
-        if spec.oracle is not None:
-            res = con.execute(spec.oracle)
-            d_cols = [d[0] for d in res.description]
-            d_rows = res.fetchall()
-            entry["oracle_rows"] = len(d_rows)
-            entry["rows_match"] = len(s_rows) == len(d_rows)
-            entry["values_match"] = canon_rows(s_cols, s_rows) == canon_rows(
-                d_cols, d_rows
-            )
-        else:
-            entry["oracle_rows"] = None
-            entry["rows_match"] = None
-            entry["values_match"] = None
         queries[name] = entry
 
     timing = subprocess.run(
@@ -172,16 +150,11 @@ def main() -> None:
         text=True,
     )
     tail = [ln for ln in timing.stdout.strip().splitlines() if ln.strip()]
-
-    from bigdata_financial_reporting_spark.oracle_compare import provenance
-
     out = {
         "_provenance": provenance(),
         "sf_dir": SF_DIR,
         "queries": queries,
-        "all_equivalent": all(
-            e["values_match"] is not False for e in queries.values()
-        ),
+        "all_equivalent": all(key_verdict(e) == "green" for e in queries.values()),
         "watermark_timing_tests": {
             "command": "pytest tests/test_streaming.py",
             "exit_code": timing.returncode,
@@ -194,6 +167,7 @@ def main() -> None:
     with open(path, "w") as f:
         json.dump(out, f, indent=2)
     print(json.dumps(out, indent=2))
+    oracle.close()
     spark.stop()
     if eviction_violations:
         print(
@@ -201,8 +175,8 @@ def main() -> None:
             + "\n  ".join(eviction_violations),
             file=sys.stderr,
         )
-        raise SystemExit(1)
+    return 0 if out["all_equivalent"] and not eviction_violations else 1
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

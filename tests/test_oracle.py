@@ -10,10 +10,9 @@ import math
 
 import pytest
 
-# The canon lives in the package now (round-6 verdict item 2: ONE
-# shared fetch + canonicalization path across test_oracle,
-# gen_local_correctness and gen_scale_correctness); re-exported here
-# because the evidence scripts historically import it from this module.
+# The canon lives in the package (ONE shared fetch + canonicalization
+# path across this test and every evidence script, which import it
+# from oracle_compare).
 from bigdata_financial_reporting_spark.oracle_compare import (  # noqa: F401
     canon_rows,
     canon_value,
