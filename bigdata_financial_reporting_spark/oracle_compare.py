@@ -299,6 +299,9 @@ def connect_oracle(sf_dir: str):
 
     con = duckdb.connect()
     tune_duck(con)
+    # no progress bar: on a long oracle it writes to stdout, where it
+    # would run into the JSON line a sweep_in_child child prints
+    con.execute("SET enable_progress_bar=false")
     for t in TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.isdir(path):

@@ -142,3 +142,14 @@ def test_sweep_in_child_round_trip_and_failures():
     assert all(key_verdict(e) == "red" and "rc=7" in e["error"] for e in crashed.values())
     silent = sweep_in_child(_child_no_json, "/d", ["a"])
     assert key_verdict(silent["a"]) == "red"
+
+
+def test_oracle_connection_prints_no_progress_bar(sf_dir):
+    """A long oracle's progress bar would run into the JSON line a
+    sweep_in_child child prints on stdout."""
+    con = oracle_compare.connect_oracle(sf_dir)
+    try:
+        (on,) = con.execute("SELECT current_setting('enable_progress_bar')").fetchone()
+    finally:
+        con.close()
+    assert on is False
