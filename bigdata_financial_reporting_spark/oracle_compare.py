@@ -37,9 +37,11 @@ import datetime as dt
 import decimal
 import json
 import math
+import os
 import struct
 import subprocess
 import sys
+import tempfile
 import threading
 import time
 from pathlib import Path
@@ -220,8 +222,6 @@ def duck_memory_limit_gb(cap_gb: int = 48, frac: float = 0.7) -> int:
     Committed_AS to the ceiling — malloc then fails (thread-spawn
     MemoryError, 2KB bad_alloc) with 60GB+ physically free. Env
     override: SPARK_GRAFT_DUCK_MEM_GB."""
-    import os
-
     env = os.environ.get("SPARK_GRAFT_DUCK_MEM_GB")
     if env:
         return max(1, int(env))
@@ -269,10 +269,13 @@ def tune_duck(con) -> None:
     files — a shared spill dir accumulated 78 GB across killed runs
     until the NEGZERO 10x stage died on a full disk; unique dirs
     bound each leak to one run and scripts/final_gate.sh purges any
-    bdfr_duck_spill_* leftovers from prior kills at gate start)."""
+    bdfr_duck_spill_* leftovers from prior kills at gate start). In a
+    :func:`sweep_in_child` child the dir lands in the child's private
+    ``TMPDIR``, which the parent removes even after a kill. The dir
+    lives as long as the connection (see ``operators/cache.py``), so it
+    is not a release-scoped ``scratch_dir``."""
     import atexit
     import shutil
-    import tempfile
 
     spill = tempfile.mkdtemp(prefix="bdfr_duck_spill_")
     atexit.register(shutil.rmtree, spill, ignore_errors=True)
@@ -293,8 +296,6 @@ def connect_oracle(sf_dir: str):
     fixture table at ``sf_dir``. A table is a single parquet file, or a
     multi-file directory ``<table>.parquet/`` (the staged 10x corpus);
     a table absent from ``sf_dir`` gets no view."""
-    import os
-
     import duckdb
 
     con = duckdb.connect()
@@ -550,7 +551,11 @@ def sweep_in_child(fn, sf_dir: str, names: list) -> dict:
     as the child's last stdout line of JSON. A nonzero rc or a missing
     JSON object marks every key of ``names`` as an error (red); an
     expired wall (the keys' caps plus 900 s for fetching and digesting
-    multi-million-row outputs) as a timeout."""
+    multi-million-row outputs) as a timeout.
+
+    The child's ``TMPDIR`` is a dir this call removes however the child
+    ended, so the temp files of a killed child (its DuckDB spill dir
+    above all, which no atexit of its own can remove) go with it."""
     mod = sys.modules[fn.__module__]
     wall = sum(key_seconds(n) for n in names) + 900
     argv = [
@@ -561,7 +566,13 @@ def sweep_in_child(fn, sf_dir: str, names: list) -> dict:
         json.dumps([sf_dir, list(names)]),
     ]
     try:
-        proc = subprocess.run(argv, capture_output=True, text=True, timeout=wall)
+        with tempfile.TemporaryDirectory(
+            prefix="bdfr_child_", ignore_cleanup_errors=True
+        ) as tmp:
+            proc = subprocess.run(
+                argv, capture_output=True, text=True, timeout=wall,
+                env={**os.environ, "TMPDIR": tmp},
+            )
     except subprocess.TimeoutExpired:
         return {n: {"timeout": "child"} for n in names}
     if proc.returncode != 0:

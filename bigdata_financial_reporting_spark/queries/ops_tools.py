@@ -4,6 +4,8 @@ tests/test_ops_tools.py instead)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from bigdata_financial_reporting_spark.functions.exact import (
@@ -16,41 +18,11 @@ from bigdata_financial_reporting_spark.functions.exact import (
     spark_dec2d,
     spark_half_div,
 )
+from bigdata_financial_reporting_spark.operators.cache import scratch_dir
 from bigdata_financial_reporting_spark.operators.profile import profile_table
 from bigdata_financial_reporting_spark.queries.registry import register
 from bigdata_financial_reporting_spark.sources.catalog import load_table
 
-
-def _scratch_path(op: str, table: str) -> str:
-    """Fixed scratch directory per (op, table), reused across
-    invocations — writers run mode('overwrite'), so reruns are safe and
-    nothing accumulates (one leaked copy per invocation otherwise)."""
-    import os
-    import tempfile
-
-    d = os.path.join(tempfile.gettempdir(), "bdfr_scratch", op)
-    os.makedirs(d, exist_ok=True)
-    return os.path.join(d, table)
-
-
-def _private_scratch(name: str) -> str:
-    """Per-PROCESS scratch dir for the manifest-table keys that
-    ``shutil.rmtree`` their staging at key start (vacuum, clone):
-    those tables are append-only manifests, not overwrite-mode
-    writers, so two concurrent harness runs (pytest + bench/sweep) on
-    one machine sharing a fixed path could rmtree each other's live
-    table mid-key (round-11 advice). The pid segment makes the path
-    private to the run; the key's own rmtree keeps reruns within a
-    process clean, and the leaked per-pid copy is a few KB of nation
-    rows in the OS temp dir."""
-    import os
-    import tempfile
-
-    d = os.path.join(
-        tempfile.gettempdir(), "bdfr_scratch", f"pid-{os.getpid()}"
-    )
-    os.makedirs(d, exist_ok=True)
-    return os.path.join(d, name)
 
 _COLS = ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"]
 
@@ -149,10 +121,7 @@ def ops_compact_roundtrip(spark, sf_dir):
     )
 
     c = load_table(spark, sf_dir, "customer")
-    # Fixed per-query scratch path (overwrite handles reruns): mkdtemp
-    # here leaked a parquet copy of customer per invocation — two per
-    # bench round with the warm phase (round-3 ADVICE).
-    path = _scratch_path("compact", "customer")
+    path = os.path.join(scratch_dir("bdfr_compact_"), "customer")
     c.repartition(16).write.mode("overwrite").parquet(path)
     compact_parquet(spark, path, target_file_bytes=256 * 1024 * 1024)
     back = spark.read.parquet(path)
@@ -198,7 +167,7 @@ def ops_upsert_roundtrip(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.round("o_totalprice", 4).alias("price")
     )
-    path = _scratch_path("upsert", "orders")
+    path = os.path.join(scratch_dir("bdfr_upsert_"), "orders")
     o.filter(F.col("o_orderkey") <= 20000).write.mode("overwrite").parquet(path)
     source = o.filter(F.col("o_orderkey").between(10000, 30000)).select(
         "o_orderkey", F.round(F.col("price") * 2, 4).alias("price")
@@ -382,7 +351,7 @@ def ops_incremental_rollup_refresh(spark, sf_dir):
             ).alias("sum_value"),
         )
     )
-    path = _scratch_path("rollup_refresh", "events_daily")
+    path = os.path.join(scratch_dir("bdfr_rollup_refresh_"), "events_daily")
     cutoff = "2024-01-28"
     # 1. stale materialization: late rows (>= cutoff) not yet arrived
     daily(ev.filter(F.col("ts") < cutoff)).write.mode("overwrite").partitionBy(
@@ -539,10 +508,6 @@ def ops_time_travel_versions(spark, sf_dir):
     that makes training runs reproducible ("the corpus as of v7")
     while ingestion continues. The commit point is a single manifest
     rename; data files are never mutated."""
-    import shutil
-    import tempfile
-    import os
-
     from bigdata_financial_reporting_spark.operators.manifest import (
         commit_version,
         files_of,
@@ -550,11 +515,8 @@ def ops_time_travel_versions(spark, sf_dir):
     )
 
     c = load_table(spark, sf_dir, "customer")
-    table_dir = os.path.join(
-        tempfile.gettempdir(), "bdfr_scratch", "tt_customer"
-    )
     # fresh table per invocation: versions must be exactly v1, v2
-    shutil.rmtree(table_dir, ignore_errors=True)
+    table_dir = scratch_dir("bdfr_tt_customer_")
     v1 = commit_version(c.filter(F.col("c_custkey") % 3 != 0), table_dir)
     v2 = commit_version(
         c.filter(F.col("c_custkey") % 3 == 0),
@@ -615,20 +577,13 @@ def ops_delete_update_cow(spark, sf_dir):
     manifest and summarized. At scale the rewrite would target only
     the files containing hit rows (base_files keeps the rest) — the
     engine-side mechanics are identical."""
-    import os
-    import shutil
-    import tempfile
-
     from bigdata_financial_reporting_spark.operators.manifest import (
         commit_version,
         read_version,
     )
 
     n = load_table(spark, sf_dir, "nation")
-    table_dir = os.path.join(
-        tempfile.gettempdir(), "bdfr_scratch", "cow_nation"
-    )
-    shutil.rmtree(table_dir, ignore_errors=True)
+    table_dir = scratch_dir("bdfr_cow_nation_")
     commit_version(n, table_dir)
     # DELETE ... WHERE n_nationkey % 3 = 0  (copy-on-write rewrite)
     deleted = read_version(spark, table_dir, 1).filter(
@@ -731,10 +686,6 @@ def ops_snapshot_expiry(spark, sf_dir):
     chain). The report reads back every surviving version and marks
     expired ones with a NULL row count — pinned readers of an expired
     version fail loudly instead of silently seeing other data."""
-    import os
-    import shutil
-    import tempfile
-
     from bigdata_financial_reporting_spark.operators.manifest import (
         _manifest_path,
         commit_version,
@@ -744,10 +695,7 @@ def ops_snapshot_expiry(spark, sf_dir):
     )
 
     n = load_table(spark, sf_dir, "nation")
-    table_dir = os.path.join(
-        tempfile.gettempdir(), "bdfr_scratch", "expiry_nation"
-    )
-    shutil.rmtree(table_dir, ignore_errors=True)
+    table_dir = scratch_dir("bdfr_expiry_nation_")
     v1 = commit_version(n.filter(F.col("n_nationkey") < 10), table_dir)
     v2 = commit_version(
         n.filter((F.col("n_nationkey") >= 10) & (F.col("n_nationkey") < 20)),
@@ -854,8 +802,6 @@ def ops_vacuum_orphan_files(spark, sf_dir):
     both the reference set (manifest union) and the listing are
     metadata-scale, never data-scale; production adds the retention
     window documented on :func:`vacuum_orphans`."""
-    import os
-    import shutil
     import uuid as _uuid
 
     from bigdata_financial_reporting_spark.operators.manifest import (
@@ -866,8 +812,7 @@ def ops_vacuum_orphan_files(spark, sf_dir):
     )
 
     n = load_table(spark, sf_dir, "nation")
-    table_dir = _private_scratch("vacuum_nation")
-    shutil.rmtree(table_dir, ignore_errors=True)
+    table_dir = scratch_dir("bdfr_vacuum_nation_")
     v1 = commit_version(n.filter(F.col("n_nationkey") < 10), table_dir)
     v2 = commit_version(
         n.filter((F.col("n_nationkey") >= 10) & (F.col("n_nationkey") < 20)),
@@ -937,9 +882,6 @@ def ops_clone_shallow(spark, sf_dir):
     file set. At 100 TB the clone is O(manifest) — the fork-a-corpus
     primitive for experiments; completes the manifest family
     (commit / time travel / expiry / vacuum / clone)."""
-    import os
-    import shutil
-
     from bigdata_financial_reporting_spark.operators.manifest import (
         clone_table,
         commit_version,
@@ -947,10 +889,9 @@ def ops_clone_shallow(spark, sf_dir):
     )
 
     n = load_table(spark, sf_dir, "nation")
-    src = _private_scratch("clone_src_nation")
-    dst = _private_scratch("clone_dst_nation")
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(dst, ignore_errors=True)
+    root = scratch_dir("bdfr_clone_nation_")
+    src = os.path.join(root, "src")
+    dst = os.path.join(root, "dst")
     v1 = commit_version(n.filter(F.col("n_nationkey") < 10), src)
     v2 = commit_version(
         n.filter((F.col("n_nationkey") >= 10) & (F.col("n_nationkey") < 20)),

@@ -4,16 +4,18 @@ read AND write paths against parquet ground truth.
 Each roundtrip writes the fixture to a temp dir in the target format
 with an explicit schema (never inferSchema — SURVEY §7.4), reads it
 back, and the oracle compares against the original parquet content.
+The temp dir is a per-call ``scratch_dir``: the returned frame reads it
+lazily, and ``release_operator_caches()`` removes it.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 from bigdata_financial_reporting_spark.functions import exact as _exact
+from bigdata_financial_reporting_spark.operators.cache import scratch_dir
 from bigdata_financial_reporting_spark.queries.registry import register
 from bigdata_financial_reporting_spark.sources.catalog import TABLE_SCHEMAS, load_table
 from bigdata_financial_reporting_spark.sources.readers import read_csv, read_json
@@ -43,7 +45,7 @@ def src_csv_roundtrip(spark, sf_dir):
     nation table as headered CSV, read it back with an explicit
     schema."""
     n = load_table(spark, sf_dir, "nation")
-    tmp = os.path.join(tempfile.mkdtemp(prefix="bdfr_csv_"), "nation_csv")
+    tmp = os.path.join(scratch_dir("bdfr_csv_"), "nation_csv")
     n.write.mode("overwrite").option("header", "true").csv(tmp)
     return read_csv(spark, tmp, schema=TABLE_SCHEMAS["nation"])
 
@@ -58,7 +60,7 @@ def src_json_roundtrip(spark, sf_dir):
     s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", F.round("s_acctbal", 6).alias("s_acctbal")
     )
-    tmp = os.path.join(tempfile.mkdtemp(prefix="bdfr_json_"), "supplier_json")
+    tmp = os.path.join(scratch_dir("bdfr_json_"), "supplier_json")
     s.write.mode("overwrite").json(tmp)
     return read_json(spark, tmp, schema=s.schema)
 
@@ -78,7 +80,7 @@ def src_parquet_partitioned_roundtrip(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", F.round("o_totalprice", 6).alias("o_totalprice")
     )
-    tmp = os.path.join(tempfile.mkdtemp(prefix="bdfr_pq_"), "orders_part")
+    tmp = os.path.join(scratch_dir("bdfr_pq_"), "orders_part")
     write_parquet(o, tmp, partition_by=["o_orderstatus"])
     back = spark.read.parquet(tmp)
     return back.select(
@@ -122,7 +124,7 @@ def src_single_csv_sink(spark, sf_dir):
     agg = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"), F.round(F.sum("l_quantity"), 4).alias("qty")
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="bdfr_scsv_"), "agg.csv")
+    path = os.path.join(scratch_dir("bdfr_scsv_"), "agg.csv")
     write_single_csv(agg, path)
     return read_csv(
         spark, path, schema="l_returnflag string, n long, qty double"
@@ -143,7 +145,7 @@ def src_orc_roundtrip(spark, sf_dir):
     read ORC, so the oracle checks the roundtripped CONTENT against the
     parquet ground truth — which is exactly the property that matters."""
     s = load_table(spark, sf_dir, "supplier")
-    tmp = os.path.join(tempfile.mkdtemp(prefix="bdfr_orc_"), "supplier_orc")
+    tmp = os.path.join(scratch_dir("bdfr_orc_"), "supplier_orc")
     s.write.mode("overwrite").orc(tmp)
     back = spark.read.schema(TABLE_SCHEMAS["supplier"]).orc(tmp)
     return back.select(
@@ -176,9 +178,6 @@ def src_split_export_roundtrip(spark, sf_dir):
     This is the layout a downstream trainer consumes — per-split
     directories, loadable independently — and the roundtrip proves the
     partition values survive the directory encoding."""
-    import os
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents")
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
@@ -187,7 +186,7 @@ def src_split_export_roundtrip(spark, sf_dir):
     )
     split = F.when(bucket < 8, "train").when(bucket == 8, "val").otherwise("test")
     out = d.select(split.alias("split"), "doc_id", "lang")
-    tmp = os.path.join(tempfile.mkdtemp(prefix="bdfr_split_"), "docs_by_split")
+    tmp = os.path.join(scratch_dir("bdfr_split_"), "docs_by_split")
     write_parquet(out, tmp, partition_by=["split"])
     back = spark.read.parquet(tmp)
     return back.select(
@@ -216,7 +215,7 @@ def src_schema_evolution_merge(spark, sf_dir):
     driver); row groups are never rewritten, so evolution is free at
     100 TB. The batch id doubles as the discriminator column."""
     d = load_table(spark, sf_dir, "documents")
-    root = os.path.join(tempfile.gettempdir(), "bdfr_scratch", "schema_merge")
+    root = scratch_dir("bdfr_schema_merge_")
     v1 = d.filter(F.col("doc_id") % 2 == 0).select(
         "doc_id", "text", F.lit("v1").alias("batch")
     )
@@ -258,7 +257,7 @@ def src_bucketed_colocated_join(spark, sf_dir):
     content survives the bucketed write+catalog read roundtrip."""
     from bigdata_financial_reporting_spark.sources.writers import write_bucketed
 
-    root = os.path.join(tempfile.gettempdir(), "bdfr_scratch", "bucketed")
+    root = scratch_dir("bdfr_bucketed_")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -368,12 +367,8 @@ def src_text_lines_roundtrip(spark, sf_dir):
     arbitrary corpora. Line splitting and parsing are codegen
     expressions; the sink keeps the source's partitioning (no
     coalesce(1) single-writer funnel)."""
-    import os
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents")
-    path = os.path.join(tempfile.gettempdir(), "bdfr_scratch", "text_lines")
-    os.makedirs(os.path.dirname(path), exist_ok=True)
+    path = os.path.join(scratch_dir("bdfr_text_lines_"), "lines")
     lines = d.select(
         F.concat_ws(
             "\t",
@@ -419,12 +414,8 @@ def src_csv_corrupt_handling(spark, sf_dir):
     oracle derives the same good/corrupt split from the construction
     rule. The one-file write is nation-sized; the read path is the
     scalable splittable CSV scan."""
-    import os
-    import tempfile
-
     n = load_table(spark, sf_dir, "nation")
-    path = os.path.join(tempfile.gettempdir(), "bdfr_scratch", "csv_corrupt")
-    os.makedirs(os.path.dirname(path), exist_ok=True)
+    path = os.path.join(scratch_dir("bdfr_csv_corrupt_"), "nation_csv")
     staged = n.select(
         F.concat_ws(
             ",",
@@ -478,12 +469,8 @@ def src_file_metadata_column(spark, sf_dir):
     access composes with normal pruning (the scan still prunes
     columns — _metadata is synthesized, not read from parquet data
     pages)."""
-    import os
-    import tempfile
-
     c = load_table(spark, sf_dir, "customer")
-    path = os.path.join(tempfile.gettempdir(), "bdfr_scratch", "meta_col")
-    os.makedirs(os.path.dirname(path), exist_ok=True)
+    path = os.path.join(scratch_dir("bdfr_meta_col_"), "customer")
     c.repartition("c_mktsegment").write.partitionBy("c_mktsegment").mode(
         "overwrite"
     ).parquet(path)
@@ -514,7 +501,7 @@ def src_xml_roundtrip(spark, sf_dir):
     back uses an explicit schema: XML stores text, and schema
     inference would widen every numeric to bigint or string."""
     n = load_table(spark, sf_dir, "nation")
-    tmp = os.path.join(tempfile.mkdtemp(prefix="bdfr_xml_"), "nation_xml")
+    tmp = os.path.join(scratch_dir("bdfr_xml_"), "nation_xml")
     (
         n.write.mode("overwrite")
         .format("xml")
@@ -550,7 +537,7 @@ def src_compressed_roundtrip(spark, sf_dir):
     read path must be transparent to it. Content equality against the
     uncompressed ground truth is the whole check."""
     p = load_table(spark, sf_dir, "part")
-    base = tempfile.mkdtemp(prefix="bdfr_codec_")
+    base = scratch_dir("bdfr_codec_")
     zpath = os.path.join(base, "part_zstd")
     p.write.mode("overwrite").option("compression", "zstd").parquet(zpath)
     gpath = os.path.join(base, "part_gzip_csv")
@@ -602,15 +589,9 @@ def src_binaryfile_scan(spark, sf_dir):
     round-trips byte-identically. At 100 TB this is the ingest path
     for the multimodal family (operators/multimodal.py), which
     consumes exactly this (path, content) shape."""
-    import os
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
     rows = d.select("doc_id", "text").collect()  # bounded: 20 docs
-    stage = os.path.join(
-        tempfile.gettempdir(), "bdfr_scratch", "binaryfile_stage"
-    )
-    os.makedirs(stage, exist_ok=True)
+    stage = scratch_dir("bdfr_binaryfile_")
     for r in rows:
         with open(os.path.join(stage, f"doc_{r['doc_id']}.txt"), "wb") as f:
             f.write(r["text"].encode("utf-8"))
@@ -646,8 +627,7 @@ def src_partition_pruning_scan(spark, sf_dir):
     never listed, opened, or read.  The oracle derives the same
     accounting from the unpartitioned source."""
     o = load_table(spark, sf_dir, "orders")
-    path = os.path.join(tempfile.gettempdir(), "bdfr_scratch", "prune_scan")
-    os.makedirs(os.path.dirname(path), exist_ok=True)
+    path = os.path.join(scratch_dir("bdfr_prune_scan_"), "orders")
     write_parquet(o, path, partition_by=["o_orderpriority"])
     back = spark.read.parquet(path).filter(
         F.col("o_orderpriority") == "1-URGENT"

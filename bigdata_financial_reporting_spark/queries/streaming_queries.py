@@ -11,6 +11,8 @@ tests/test_streaming.py instead.
 
 from __future__ import annotations
 
+import shutil
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -21,13 +23,13 @@ from bigdata_financial_reporting_spark.functions.exact import (
     micro_units,
     spark_half_div,
 )
+from bigdata_financial_reporting_spark.operators.cache import scratch_dir
 from bigdata_financial_reporting_spark.queries.ops_tools import (
     CDC_APPLY_ORACLE,
 )
 from bigdata_financial_reporting_spark.queries.registry import register
 from bigdata_financial_reporting_spark.sources.catalog import load_table
 from bigdata_financial_reporting_spark.streaming.runner import (
-    discard_checkpoint,
     ephemeral_checkpoint_dir,
     events_stream,
     run_available_now,
@@ -329,9 +331,7 @@ def stream_foreach_batch_sink(spark, sf_dir):
     via arbitrary Python (the hook production uses for MERGE/upsert into
     warehouses). Draining with availableNow and re-reading the sink must
     equal the batch computation."""
-    import tempfile
-
-    out_dir = tempfile.mkdtemp(prefix="bdfr_feb_sink_")
+    out_dir = scratch_dir("bdfr_feb_sink_")
     s = events_stream(spark, sf_dir).filter(F.col("value") > 100)
 
     def sink(batch_df, batch_id):
@@ -346,7 +346,7 @@ def stream_foreach_batch_sink(spark, sf_dir):
         .start()
     )
     q.awaitTermination()
-    discard_checkpoint(ckpt)
+    shutil.rmtree(ckpt, ignore_errors=True)
     return (
         spark.read.parquet(out_dir)
         .groupBy("event_type")
@@ -566,8 +566,6 @@ def stream_cdc_upsert_sink(spark, sf_dir):
     merge-on-read); the log derivation and snapshot are fully
     distributed — nothing key-sized ever reaches the driver."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
@@ -584,8 +582,9 @@ def stream_cdc_upsert_sink(spark, sf_dir):
     # its column from the data files and the stream schema needs
     # `version` in-file. The stage, the log and the snapshots share one
     # work dir; each is removed as soon as nothing reads it, so the
-    # work dir ends up holding only the final snapshot.
-    work = tempfile.mkdtemp(prefix="bdfr_cdc_")
+    # work dir ends up holding only the final snapshot, which the
+    # returned frame reads until the release removes the work dir.
+    work = scratch_dir("bdfr_cdc_")
     log_dir = os.path.join(work, "log")
     stage = os.path.join(work, "stage")
     os.makedirs(log_dir)
@@ -607,7 +606,6 @@ def stream_cdc_upsert_sink(spark, sf_dir):
         # the per-version staged file is the micro-batch unit, so an
         # empty version would silently change the drain's batch count)
         if not os.path.isdir(vdir):
-            shutil.rmtree(work, ignore_errors=True)
             raise ValueError(
                 f"cdc staging: change-log version {version} produced "
                 "no rows — every version must stage one non-empty "
@@ -664,7 +662,7 @@ def stream_cdc_upsert_sink(spark, sf_dir):
             .start()
         )
         q.awaitTermination()
-        discard_checkpoint(ckpt)
+        shutil.rmtree(ckpt, ignore_errors=True)
     shutil.rmtree(log_dir, ignore_errors=True)
     snap = spark.read.parquet(state["path"])
     return snap.filter(F.col("op") != "D").select(

@@ -10,11 +10,9 @@ unchanged with a real trigger + kafka/parquet sinks + checkpointing.
 
 from __future__ import annotations
 
-import atexit
 import contextlib
 import os
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,18 +20,21 @@ from pyspark.sql import functions as F
 
 from pyspark.sql import types as T
 
+from bigdata_financial_reporting_spark.operators.cache import (
+    scratch_dir,
+    track_view,
+)
 from bigdata_financial_reporting_spark.sources.catalog import (
     TABLE_SCHEMAS,
     validate_schema,
 )
 
-# File-stream sources require a DIRECTORY; the fixture is a single
-# parquet file, so stage a symlink dir per sf_dir (cached).
-_STREAM_DIRS: dict[str, str] = {}
-
 
 def _stage_stream_dir(src: str, prefix: str) -> str:
-    """Stage a fixture as a file-stream directory of per-FILE symlinks.
+    """Stage a fixture as a file-stream directory of per-FILE symlinks
+    (file-stream sources require a DIRECTORY). Staged per call in a
+    ``scratch_dir``: a dir memoized per fixture would outlive the
+    release that removes it, and the stream would then read 0 rows.
 
     The fixture may be a single parquet file or a directory of part
     files (the multi-file 10x layout): Spark's stream file listing
@@ -42,7 +43,7 @@ def _stage_stream_dir(src: str, prefix: str) -> str:
     corpus (stream_content_dedup read 0 rows). Per-file links also
     mean a multi-file fixture replays as genuinely multiple
     micro-batches under maxFilesPerTrigger."""
-    d = tempfile.mkdtemp(prefix=prefix)
+    d = scratch_dir(prefix)
     src = os.path.abspath(src)
     if os.path.isdir(src):
         for i, name in enumerate(sorted(os.listdir(src))):
@@ -53,14 +54,6 @@ def _stage_stream_dir(src: str, prefix: str) -> str:
     else:
         os.symlink(src, os.path.join(d, os.path.basename(src)))
     return d
-
-
-def _events_dir(sf_dir: str) -> str:
-    if sf_dir not in _STREAM_DIRS:
-        _STREAM_DIRS[sf_dir] = _stage_stream_dir(
-            os.path.join(sf_dir, "events.parquet"), "bdfr_stream_events_"
-        )
-    return _STREAM_DIRS[sf_dir]
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,10 +74,9 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_is_long = dict((f.name, f.dataType.simpleString()) for f in on_disk.fields).get(
         "ts"
     ) == "bigint"
+    staged = _stage_stream_dir(path, "bdfr_stream_events_")
     if ts_is_long:
-        df = spark.readStream.schema(TABLE_SCHEMAS["events"]).parquet(
-            _events_dir(sf_dir)
-        )
+        df = spark.readStream.schema(TABLE_SCHEMAS["events"]).parquet(staged)
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     micros_schema = T.StructType(
         [
@@ -92,7 +84,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             for f in TABLE_SCHEMAS["events"].fields
         ]
     )
-    return spark.readStream.schema(micros_schema).parquet(_events_dir(sf_dir))
+    return spark.readStream.schema(micros_schema).parquet(staged)
 
 
 @contextlib.contextmanager
@@ -123,24 +115,6 @@ def scoped_state_partitions(spark: SparkSession, n: int = 4):
         conf.set("spark.sql.shuffle.partitions", prev)
 
 
-#: Checkpoint dirs created this process, pending removal. Unlike
-#: Spark's own temp checkpoints (auto-deleted on clean stop), these
-#: explicit locations are never removed by Spark — and they prefer
-#: RAM-backed /dev/shm, so leaking them across repeated bench/gate
-#: runs leaks tmpfs that outlives the process (round-13 advice).
-#: Each drain removes its own dir as soon as the memory-sink result
-#: is materialized; the atexit hook is the backstop for error paths.
-_CKPT_DIRS: list[str] = []
-
-
-def _cleanup_ckpt_dirs() -> None:
-    while _CKPT_DIRS:
-        shutil.rmtree(_CKPT_DIRS.pop(), ignore_errors=True)
-
-
-atexit.register(_cleanup_ckpt_dirs)
-
-
 def ephemeral_checkpoint_dir() -> str:
     """A checkpoint location for finite availableNow drains.
 
@@ -150,24 +124,16 @@ def ephemeral_checkpoint_dir() -> str:
     to RAM-backed tmpfs when the host has one — measured ~0.1 s of
     ext4 fsync wall per micro-batch otherwise. A production deployment
     points checkpointLocation at durable shared storage instead; this
-    helper is only for the drain-to-memory harness. Callers should
-    ``discard_checkpoint()`` the dir once their drain completes; dirs
-    still pending at interpreter exit are removed by the atexit
-    backstop."""
+    helper is only for the drain-to-memory harness.
+
+    Spark never removes an explicit checkpoint location, and tmpfs
+    outlives the process, so a caller removes the dir
+    (``shutil.rmtree``) as soon as its drain terminates; that keeps the
+    tmpfs bounded within one query. The dir is a ``scratch_dir``, so
+    on an error path ``release_operator_caches()`` or process exit
+    removes it instead."""
     base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    d = tempfile.mkdtemp(prefix="bdfr_ckpt_", dir=base)
-    _CKPT_DIRS.append(d)
-    return d
-
-
-def discard_checkpoint(path: str) -> None:
-    """Remove a drained checkpoint dir created by
-    ``ephemeral_checkpoint_dir`` (idempotent, error-tolerant)."""
-    shutil.rmtree(path, ignore_errors=True)
-    try:
-        _CKPT_DIRS.remove(path)
-    except ValueError:
-        pass
+    return scratch_dir("bdfr_ckpt_", dir=base)
 
 
 #: Micro-batch progress events of the most recent availableNow drain
@@ -183,7 +149,9 @@ def run_available_now(
     result: DataFrame, output_mode: str = "complete", max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """Run a streaming DataFrame to completion into a memory sink and
-    return the final result as a static DataFrame."""
+    return the final result as a static DataFrame. The sink's temp view
+    is dropped at the next ``release_operator_caches()``; the returned
+    frame keeps reading the sink."""
     name = "stream_" + uuid.uuid4().hex[:12]
     ckpt = ephemeral_checkpoint_dir()
     writer = (
@@ -200,11 +168,10 @@ def run_available_now(
     LAST_DRAIN_PROGRESS[:] = list(q.recentProgress)
     # the memory sink holds the drained rows driver-side; the
     # checkpoint has served its purpose once the drain terminates
-    discard_checkpoint(ckpt)
-    return result.sparkSession.table(name)
-
-
-_DOC_STREAM_DIRS: dict[str, str] = {}
+    shutil.rmtree(ckpt, ignore_errors=True)
+    spark = result.sparkSession
+    track_view(spark, name)
+    return spark.table(name)
 
 
 def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -214,8 +181,6 @@ def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(sf_dir, "documents.parquet")
     on_disk = spark.read.parquet(path).schema
     validate_schema(on_disk, "documents", path)
-    if sf_dir not in _DOC_STREAM_DIRS:
-        _DOC_STREAM_DIRS[sf_dir] = _stage_stream_dir(path, "bdfr_stream_docs_")
     return spark.readStream.schema(TABLE_SCHEMAS["documents"]).parquet(
-        _DOC_STREAM_DIRS[sf_dir]
+        _stage_stream_dir(path, "bdfr_stream_docs_")
     )

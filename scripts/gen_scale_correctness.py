@@ -76,11 +76,16 @@ def main() -> int:
     def check(name: str) -> dict:
         s_cols, s_rows = fetch_spark(QUERIES[name].fn(spark, sf_dir))
         entry = {"spark_rows": len(s_rows)}
+        # digest, then drop, the Spark rows before the DuckDB child
+        # starts: at 10x they are millions of tuples the child's memory
+        # would otherwise have to fit beside
+        s_digest = canon_digest(s_cols, s_rows)
+        del s_rows
         d = sweep_in_child(duck_digests, sf_dir, [name])[name]
         if "digest" not in d:  # the child's timeout or error
             return {**entry, **d}
         entry.update(mode="oracle", oracle_rows=d["digest"]["n_rows"])
-        entry.update(compare_digest_entry(canon_digest(s_cols, s_rows), d["digest"]))
+        entry.update(compare_digest_entry(s_digest, d["digest"]))
         return entry
 
     def build(queries: dict, v: dict) -> dict:

@@ -134,6 +134,15 @@ def _child_no_json(sf_dir, names):
     return None
 
 
+def _child_killed_with_temp_files(sf_dir, names):
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix="bdfr_killed_child_")
+    with open(os.path.join(d, "spill.tmp"), "w") as fh:
+        fh.write("x" * 1024)
+    os._exit(1)
+
+
 def test_sweep_in_child_round_trip_and_failures():
     got = sweep_in_child(_child_clean, "/d", ["a", "b"])
     assert got == {n: {"mode": "signbit", "hits": [], "sf_dir": "/d"} for n in "ab"}
@@ -142,6 +151,24 @@ def test_sweep_in_child_round_trip_and_failures():
     assert all(key_verdict(e) == "red" and "rc=7" in e["error"] for e in crashed.values())
     silent = sweep_in_child(_child_no_json, "/d", ["a"])
     assert key_verdict(silent["a"]) == "red"
+
+
+def test_killed_child_leaves_no_temp_entry():
+    """A child killed before its atexit runs (a DuckDB spill dir, say)
+    must not leave its temp files behind: they live in a TMPDIR the
+    parent removes."""
+    import tempfile
+
+    def entries():
+        return {
+            n for n in os.listdir(tempfile.gettempdir())
+            if n.startswith("bdfr_killed_child_")
+        }
+
+    before = entries()
+    got = sweep_in_child(_child_killed_with_temp_files, "/d", ["a"])
+    assert "rc=1" in got["a"]["error"]
+    assert entries() == before
 
 
 def test_oracle_connection_prints_no_progress_bar(sf_dir):
